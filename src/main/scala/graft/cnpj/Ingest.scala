@@ -7,6 +7,7 @@ import java.util.zip.ZipFile
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructType}
+import scala.util.control.NonFatal
 
 /** Data-plane ingestion: fetch → unzip → decode CSV → partitioned lake
   * (SURVEY S5/S6/S7, T2/T5, K1-K4, M2, F4).
@@ -109,7 +110,9 @@ object Retry {
     while (true) {
       try return body
       catch {
-        case e: Throwable =>
+        // fatal errors and interrupts propagate at once: sleeping and
+        // retrying after them would only delay the shutdown they signal
+        case NonFatal(e) =>
           remaining -= 1
           if (remaining <= 0) throw e
           Thread.sleep(delay)

@@ -115,6 +115,7 @@ object IngestJob {
       }
     } catch {
       // M1: per-table failure isolation
+      // Throwable, not NonFatal: a fatal error never completes its Future and Await.result(_, Inf) hangs
       case e: Throwable => TableResult(tm.name, updated = false, 0L, Some(e.getMessage))
     }
   }

@@ -38,18 +38,12 @@ object Bfs {
     * the frame is dead). The query layer memoizes ONE result per
     * (session, dir) and releases it in clearCaches.
     *
-    * Lineage is cut per round with `localCheckpoint`, not `persist`:
-    * persist caches only the PHYSICAL result — the logical plan still
-    * nests every prior round twice (the expansion references the old
-    * frontier AND the distance vector), so Catalyst analysis + codegen
-    * grew exponentially with depth and dominated wall time (measured:
-    * ~36 s of pure driver-side planning for depth 4 at sf0.01, and every
-    * later action on the result re-paid ~8 s to re-plan the nested tree).
-    * Checkpointing resets each round's plan to a LogicalRDD leaf, so the
-    * accumulated distance vector is a flat union of leaves — planning is
-    * O(1) per round and O(depth) at the end. On a multi-executor cluster
-    * swap in reliable `checkpoint()` if executor loss must be survivable
-    * mid-loop; the algorithm is unchanged.
+    * Each level's frontier is a [[Lineage.cut]] leaf (see [[Lineage]]
+    * for why a cut and not persist), so the accumulated distance vector
+    * is a flat union of leaves — planning is O(1) per round and O(depth)
+    * at the end. This loop does not run on [[Lineage.iterate]]: every
+    * level's frontier is read by the final union, so no superseded round
+    * can be released before the result is consolidated.
     */
   def levels(el: DataFrame, source: Long, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")

@@ -161,8 +161,8 @@ object Bpe {
     * the SAME left-to-right non-overlapping pass [[encode]] uses, so
     * learning and encoding share one application semantics (BpeSpec pins
     * the learner against a sequential reference that models the
-    * shared-delimiter rule explicitly). Per-round frames are lineage-cut
-    * with release deferred one round (the KCore discipline).
+    * shared-delimiter rule explicitly). The rounds run on
+    * [[Lineage.iterate]].
     *
     * Learning stops early when no pair repeats (every count ≤ 1 merges
     * nothing useful — returns what it has).
@@ -172,13 +172,16 @@ object Bpe {
     val words = docs.select(explode(split(col(textCol), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
-    var vocab = Lineage.cut(words.select(
+    val init = Lineage.cut(words.select(
       concat(lit(" "), concat_ws(" ", split(col("w"), "")), lit(" </w> ")).as("s"),
       col("n")))
-    var prev: DataFrame = null
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var done = false
-    while (!done && merges.length < nMerges) {
+    // round r's probe learns rule r and the step applies it, so nMerges
+    // rounds take nMerges - 1 steps
+    val fix = Lineage.iterate(init, nMerges - 1) { vocab =>
+      val (pair, merged) = merges.last
+      vocab.select(replace(col("s"), lit(s" $pair "), lit(s" $merged ")).as("s"), col("n"))
+    } { (vocab, _) =>
       val top = vocab
         .select(split(trim(col("s")), " ").as("a"), col("n"))
         .filter(size(col("a")) >= 2)
@@ -188,21 +191,14 @@ object Bpe {
         .groupBy(col("p.x").as("x"), col("p.y").as("y")).agg(sum(col("n")).as("cnt"))
         .orderBy(col("cnt").desc, col("x"), col("y"))
         .limit(1).collect()
-      if (top.isEmpty || top(0).getLong(2) <= 1) done = true
-      else {
+      val done = top.isEmpty || top(0).getLong(2) <= 1
+      if (!done) {
         val (x, y) = (top(0).getString(0), top(0).getString(1))
         merges += ((s"$x $y", x + y))
-        val next = Lineage.cut(vocab.select(
-          replace(col("s"), lit(s" $x $y "), lit(s" ${x + y} ")).as("s"), col("n")))
-        if (prev != null) Lineage.release(prev)
-        prev = vocab
-        vocab = next
       }
+      done
     }
-    // materialize nothing further: the last round's argmax already ran a
-    // job over `vocab`, so its blocks exist; free everything
-    if (prev != null) Lineage.release(prev)
-    Lineage.release(vocab)
+    Lineage.release(fix.state)
     merges.toSeq
   }
 

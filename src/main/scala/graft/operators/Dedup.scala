@@ -647,17 +647,10 @@ object Dedup {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // per-round label tables are localCheckpoint'ed, not persisted: the
-    // round's plan references the previous labels THREE times (both sides
-    // of the jump self-join + the neighbor propagation), so without
-    // cutting the LOGICAL lineage Catalyst re-plans an exponentially
-    // nested tree every round (see Bfs.levels for the measured cost)
-    var parent = Lineage.cut(edges.groupBy(col("src").as("doc"))
+    val init = Lineage.cut(edges.groupBy(col("src").as("doc"))
       .agg(min(col("dst")).as("nmin"))
       .select(col("doc"), least(col("doc"), col("nmin")).as("component")))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
+    val fix = Lineage.iterate(init, maxIters) { parent =>
       // explicit aliases: parent self-joins on its own label column
       val jumped = parent.as("p")
         .join(parent.as("q"), col("p.component") === col("q.doc"))
@@ -666,26 +659,18 @@ object Dedup {
         .join(jumped.select(col("doc").as("dst2"), col("component")),
           col("dst") === col("dst2"))
         .groupBy(col("src").as("doc")).agg(min(col("component")).as("nmin"))
-      val next = Lineage.cut(jumped
+      jumped
         .join(nmin, Seq("doc"), "left")
         .select(col("doc"),
-          least(col("component"), coalesce(col("nmin"), col("component"))).as("component")))
-      // ONE action per round: the inequality join materializes `next`'s
-      // checkpoint blocks as a side effect; the superseded label table is
-      // then released EAGERLY (Lineage.release) — the loop never holds
-      // more than two rounds of block storage
-      converged = next.join(parent.withColumnRenamed("component", "old"), "doc")
-        .filter(col("component") =!= col("old")).isEmpty
-      Lineage.release(parent)
-      parent = next
-      iter += 1
+          least(col("component"), coalesce(col("nmin"), col("component"))).as("component"))
+    } { (next, prev) =>
+      // ONE action per round: the inequality join materializes `next`
+      prev.exists(parent => next.join(parent.withColumnRenamed("component", "old"), "doc")
+        .filter(col("component") =!= col("old")).isEmpty)
     }
     edges.unpersist()
-    if (!converged)
-      throw new IllegalStateException(
-        s"pointerDoublingComponents did not converge in $maxIters iterations " +
-          "— raise maxIters; returning partial labels would silently mislabel survivors")
-    parent
+    fix.orThrow(s"pointerDoublingComponents did not converge in $maxIters iterations " +
+      "— raise maxIters; returning partial labels would silently mislabel survivors")
   }
 
   /** Distributed min-label propagation (synchronous fixpoint, rounds ∝
@@ -703,14 +688,9 @@ object Dedup {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .cache()
-    // localCheckpoint per round for the same reason as
-    // pointerDoublingComponents: cut the LOGICAL lineage, not just the
-    // physical one, or per-round planning cost compounds
-    var labels = Lineage.cut(edges.select(col("src").as("doc")).distinct()
+    val init = Lineage.cut(edges.select(col("src").as("doc")).distinct()
       .withColumn("component", col("doc")))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
+    val fix = Lineage.iterate(init, maxIters) { labels =>
       val neighborMin = edges
         .join(labels, edges("dst") === labels("doc"))
         .groupBy(col("src").as("doc2")).agg(min(col("component")).as("nmin"))
@@ -718,23 +698,17 @@ object Dedup {
       // probe reads the checkpointed round's blocks instead of
       // re-joining next against labels — one join + one shuffle fewer
       // per round, same fixpoint predicate
-      val next = Lineage.cut(labels
+      labels
         .join(neighborMin, labels("doc") === neighborMin("doc2"), "left")
         .select(col("doc"),
           least(col("component"), coalesce(col("nmin"), col("component"))).as("component"),
-          (coalesce(col("nmin"), col("component")) < col("component")).as("__chg")))
-      converged = next.filter(col("__chg")).isEmpty
-      Lineage.release(labels) // superseded round: free its blocks now
-      labels = next.select(col("doc"), col("component"))
-      iter += 1
-    }
+          (coalesce(col("nmin"), col("component")) < col("component")).as("__chg"))
+    } ((next, prev) => prev.isDefined && next.filter(col("__chg")).isEmpty)
     edges.unpersist()
-    if (!converged)
-      throw new IllegalStateException(
-        s"labelPropComponents did not converge in $maxIters iterations " +
-          "(component diameter exceeds maxIters) — raise maxIters; returning " +
-          "partial labels would silently mislabel survivors")
-    labels
+    fix.orThrow(s"labelPropComponents did not converge in $maxIters iterations " +
+      "(component diameter exceeds maxIters) — raise maxIters; returning " +
+      "partial labels would silently mislabel survivors")
+      .select(col("doc"), col("component"))
   }
 
   /** 60-bit SimHash fingerprint per document over distinct whitespace

@@ -26,10 +26,8 @@ import org.apache.spark.sql.functions._
   * the pathological case and the operator THROWS rather than return a
   * half-peeled subgraph).
   *
-  * Per-round frames are [[Lineage.cut]] (localCheckpoint) and released
-  * eagerly — the loop holds ≤ 2 rounds of blocks; the result is one
-  * checkpoint leaf the caller must free with [[Lineage.release]]
-  * (unpersist cannot reach a LogicalRDD leaf).
+  * The rounds run on [[Lineage.iterate]]; the result is one checkpoint
+  * leaf the caller must free with [[Lineage.release]].
   */
 object KCore {
 
@@ -40,40 +38,27 @@ object KCore {
     */
   def kCore(el: DataFrame, k: Int, maxIters: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    // (u, v) both-ways convention shared with Bfs/Sssp/PageRank
-    var edges = Lineage.cut(el.select(col("u").as("src"), col("v").as("dst")))
-    var prev: DataFrame = null // superseded round, release deferred below
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      // ONE action per round. Its job-end doCheckpoint also materializes
-      // the CURRENT cut's blocks — which is why the release below is
-      // deferred one round: a cut frame is lazy until a job touches it,
-      // so freeing its predecessor before that job loses the blocks the
-      // lazy plan still reads (the Bfs release-deferred-a-round rule).
-      val bad = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    def bad(edges: DataFrame): DataFrame =
+      edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") < k).select(col("src").as("bad"))
-      if (bad.isEmpty) converged = true
-      else {
-        val next = Lineage.cut(edges
-          .join(bad.withColumnRenamed("bad", "src"), Seq("src"), "left_anti")
-          .join(bad.withColumnRenamed("bad", "dst"), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst")))
-        if (prev != null) Lineage.release(prev)
-        prev = edges
-        edges = next
-      }
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"kCore(k=$k) did not converge in $maxIters peel rounds — raise maxIters; " +
-          "returning a partially peeled subgraph would overstate the core")
+    // (u, v) both-ways convention shared with Bfs/Sssp/PageRank
+    val init = Lineage.cut(el.select(col("u").as("src"), col("v").as("dst")))
+    // ONE action per round, the `bad` probe on the current edges: the
+    // converging empty-`bad` probe counts as one of the maxIters rounds,
+    // which leaves maxIters - 1 peel steps
+    val peeled = Lineage.iterate(init, maxIters - 1) { edges =>
+      val b = bad(edges)
+      edges
+        .join(b.withColumnRenamed("bad", "src"), Seq("src"), "left_anti")
+        .join(b.withColumnRenamed("bad", "dst"), Seq("dst"), "left_anti")
+        .select(col("src"), col("dst"))
+    } ((edges, _) => bad(edges).isEmpty)
+      .orThrow(s"kCore(k=$k) did not converge in $maxIters peel rounds — raise maxIters; " +
+        "returning a partially peeled subgraph would overstate the core")
     val result = Lineage.cut(
-      edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
+      peeled.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
     result.count() // materialize the leaf BEFORE freeing what it reads
-    if (prev != null) Lineage.release(prev)
-    Lineage.release(edges)
+    Lineage.release(peeled)
     result
   }
 }

@@ -69,39 +69,29 @@ object PageRank {
 
   /** Iterate to fixpoint: stop when the integer L1 delta ≤ `epsScaled`
     * or after `maxIter` rounds. Returns (final vector, rounds run,
-    * final delta).
+    * final delta) — hitting the cap returns, it does not throw.
     *
-    * LIFECYCLE: each superseded round's checkpoint blocks are released
-    * eagerly inside the loop (the loop holds at most two rounds of
-    * storage); the RETURNED vector is itself checkpoint-backed, and
-    * `unpersist()` cannot free checkpoint blocks — call
-    * [[Lineage.release]] on it when done (after which the frame is
+    * The RETURNED vector is checkpoint-backed ([[Lineage.iterate]]):
+    * call [[Lineage.release]] on it when done (after which the frame is
     * dead). Callers should hold ONE memoized result per input, not
     * rebuild per call.
     */
   def converge(el: DataFrame, deg: DataFrame, epsScaled: Long,
                maxIter: Int = 20): (DataFrame, Int, Long) = {
     val n = deg.count()
-    // localCheckpoint (not persist) between rounds: persist cuts only the
-    // physical lineage — round k's LOGICAL plan would still nest all k
-    // predecessors and Catalyst would re-analyze the whole chain every
-    // round (see Bfs.levels for the measured cost of that trap)
-    var pr = Lineage.cut(initial(deg, n))
-    var it = 0
     var delta = Long.MaxValue
-    while (delta > epsScaled && it < maxIter) {
-      val next = Lineage.cut(step(el, deg, pr, n))
-      // exact integer L1 distance — one tiny join over two (node, long)
-      // vectors; an action, so `next`'s checkpoint blocks materialize
-      // here and the superseded vector is released by the context cleaner
-      delta = next.select(col("node"), col("pr").as("__npr"))
-        .join(pr, "node")
-        .agg(sum(abs(col("__npr") - col("pr"))))
-        .head().getLong(0)
-      Lineage.release(pr) // superseded vector: free its blocks now
-      pr = next
-      it += 1
+    val fix = Lineage.iterate(Lineage.cut(initial(deg, n)), maxIter)(step(el, deg, _, n)) {
+      (next, prev) =>
+        // exact integer L1 distance — one tiny join over two (node, long)
+        // vectors; the action that materializes `next`
+        prev.foreach { pr =>
+          delta = next.select(col("node"), col("pr").as("__npr"))
+            .join(pr, "node")
+            .agg(sum(abs(col("__npr") - col("pr"))))
+            .head().getLong(0)
+        }
+        delta <= epsScaled
     }
-    (pr, it, delta)
+    (fix.state, fix.steps, delta)
   }
 }

@@ -26,10 +26,8 @@ import org.apache.spark.sql.functions._
   * longs — no floating point, so the fixpoint (and the oracle compare)
   * is engine-independent.
   *
-  * LIFECYCLE: per-round vectors are [[Lineage.cut]] (O(1) planning per
-  * round) and each superseded round is released eagerly; the RESULT is
-  * one checkpoint leaf — free it with [[Lineage.release]] when done
-  * (`unpersist()` cannot reach checkpoint blocks).
+  * The rounds run on [[Lineage.iterate]]; the RESULT is one checkpoint
+  * leaf — free it with [[Lineage.release]] when done.
   */
 object Sssp {
 
@@ -48,30 +46,21 @@ object Sssp {
     require(el.filter(col("w") < 1).isEmpty,
       "Sssp.distances requires integer edge weights >= 1 (a weight < 1 " +
         "unbounds the round count; negative weights change the problem)")
-    var dist = spark.range(1)
+    val init = spark.range(1)
       .select(lit(source).cast("long").as("node"), lit(0L).as("dist"))
-    var converged = false
-    var round = 0
     // with weights >= 1 any simple path within the budget has <= maxCost
     // hops, so Bellman-Ford converges in <= maxCost + 1 rounds
-    while (!converged && round <= maxCost) {
+    Lineage.iterate(init, maxCost.min(Int.MaxValue - 1L).toInt + 1) { dist =>
       val relaxed = dist.as("d")
         .join(el.as("e"), col("d.node") === col("e.u"))
         .select(col("e.v").as("node"), (col("d.dist") + col("e.w")).as("dist"))
         .filter(col("dist") <= maxCost)
-      val next = Lineage.cut(dist.union(relaxed)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist")))
-      // ONE action per round: the improvement probe materializes `next`'s
-      // checkpoint blocks; a node improved if its min dropped or it is new
-      converged = next.join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left")
-        .filter(col("old").isNull || col("dist") < col("old")).isEmpty
-      Lineage.release(dist) // superseded vector: free its blocks now
-      dist = next
-      round += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"Sssp did not converge within ${maxCost + 1} rounds — edge weights " +
-        "must be integers >= 1 for the budget to bound the round count")
-    dist
+      dist.union(relaxed).groupBy(col("node")).agg(min(col("dist")).as("dist"))
+    } { (next, prev) =>
+      // a node improved if its min dropped or it is new
+      prev.exists(dist => next.join(dist.withColumnRenamed("dist", "old"), Seq("node"), "left")
+        .filter(col("old").isNull || col("dist") < col("old")).isEmpty)
+    }.orThrow(s"Sssp did not converge within ${maxCost + 1} rounds — edge weights " +
+      "must be integers >= 1 for the budget to bound the round count")
   }
 }

@@ -183,7 +183,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("PageRank.converge reaches an integer-L1 fixpoint under the cap and one further step stays inside eps") {
-    import graft.operators.PageRank
+    import graft.operators.{Lineage, PageRank}
     val li = Tables.lineitem(spark, sf)
       .filter(col("l_partkey") % 4 === 0)
       .select(col("l_orderkey"), col("l_partkey"))
@@ -192,13 +192,23 @@ class AnalyticsSpec extends AnyFunSuite {
         col("a.l_orderkey") === col("b.l_orderkey") && col("a.l_partkey") < col("b.l_partkey"))
       .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
       .distinct()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val el = PageRank.bothWays(eu).persist()
     val deg = PageRank.degrees(el).persist()
     val S = PageRank.Scale
     val eps = S / 1000L
     val (pr, iters, delta) = PageRank.converge(el, deg, eps, maxIter = 60)
     assert(delta <= eps, s"no fixpoint: delta=$delta after $iters rounds")
-    assert(iters < 60, "hit the iteration cap instead of the early exit")
+    assert(iters == 5, s"this graph reaches eps in exactly 5 rounds, got $iters")
+    // round budget: the smallest cap that converges returns the same
+    // fixpoint; one fewer returns unconverged (delta > eps), not a throw
+    val (atCap, capIters, capDelta) = PageRank.converge(el, deg, eps, maxIter = 5)
+    assert(capIters == 5 && capDelta == delta)
+    Lineage.release(atCap)
+    val (short, shortIters, shortDelta) = PageRank.converge(el, deg, eps, maxIter = 4)
+    assert(shortIters == 4 && shortDelta > eps,
+      s"cap 4 must stop unconverged: ($shortIters, $shortDelta)")
+    Lineage.release(short)
     // mass is conserved at the fixpoint up to accumulated floor losses
     val mass = pr.agg(sum(col("pr"))).head().getLong(0)
     assert(math.abs(mass - S) < S / 100000L, s"mass drifted: $mass vs $S")
@@ -210,7 +220,10 @@ class AnalyticsSpec extends AnyFunSuite {
       .join(pr, "node")
       .agg(sum(abs(col("__npr") - col("pr")))).head().getLong(0)
     assert(delta2 <= eps, s"fixpoint not stable: a further round moved L1 by $delta2")
-    pr.unpersist(); el.unpersist(); deg.unpersist()
+    // unpersist() cannot reach the result's checkpoint blocks; release can
+    Lineage.release(pr); el.unpersist(); deg.unpersist()
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"converge + release must free every round's blocks; leaked: $leaked")
   }
 
   test("q87: bloom-prefiltered semi-join equals the plain semi-join; might_contain is in the plan") {
@@ -375,14 +388,20 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("Bfs: levels match a sequential BFS recompute; depth cap respected; unreachable absent") {
-    import graft.operators.{Bfs, PageRank}
+    import graft.operators.{Bfs, Lineage, PageRank}
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     // small deterministic graph: path 1-2-3-4-5-6 plus a triangle 1-7-8
     // and an isolated edge 100-101 (unreachable from 1)
     val edges = Seq((1L,2L),(2L,3L),(3L,4L),(4L,5L),(5L,6L),(1L,7L),(7L,8L),(8L,1L),(100L,101L))
     val el = PageRank.bothWays(
       spark.createDataFrame(edges).toDF("u", "v"))
-    val got = Bfs.levels(el, 1L, 3)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val result = Bfs.levels(el, 1L, 3)
+    val got = result.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    // per-level frontiers are freed once the result leaf consolidates
+    // them; releasing the result leaves the block manager as found
+    Lineage.release(result)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"levels + release must free every frontier's blocks; leaked: $leaked")
     // sequential BFS truth
     val adj = edges.flatMap { case (u, v) => Seq(u -> v, v -> u) }
       .groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2).toSet }
@@ -414,6 +433,13 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(got == Map(1L -> 0L, 2L -> 4L, 3L -> 2L, 4L -> 9L),
       s"weighted relaxation wrong: $got")
     assert(!got.contains(5L), "budget-exceeding node leaked in")
+    // round budget at the maxCost boundary: a unit-weight chain 1→…→5
+    // under maxCost 4 reaches node 5 in round 4 and needs round 5 =
+    // maxCost + 1 to see no improvement; one round fewer would throw
+    val unitChain = (1L until 5L).map(i => (i, i + 1, 1L)).toDF("u", "v", "w")
+    val boundary = Sssp.distances(unitChain, 1L, maxCost = 4L)
+    assert(boundary.as[(Long, Long)].collect().toMap == (1L to 5L).map(i => i -> (i - 1)).toMap)
+    Lineage.release(boundary)
     // superseded rounds were released eagerly inside the loop; releasing
     // the result leaves the block manager exactly as found
     Lineage.release(result)
@@ -430,9 +456,10 @@ class AnalyticsSpec extends AnyFunSuite {
     import graft.operators.{KCore, Lineage, PageRank}
     val before = spark.sparkContext.getPersistentRDDs.keySet
     // 4-clique {1,2,3,4} (degrees 3) + a chain 4-5-6-7 hanging off it.
-    // k=3: the chain must peel node by node ACROSS ROUNDS (7 first, then
-    // 6, then 5 — the cascade parallel peeling exists to handle), and
-    // node 4's degree drops 4→3 as the chain dies yet it must survive.
+    // k=3: the whole chain (degrees 2, 2, 1) peels in the first round and
+    // node 4's degree drops 4→3 yet it must survive. k=2: the chain must
+    // peel node by node ACROSS ROUNDS (7 first, then 6, then 5 — the
+    // cascade parallel peeling exists to handle).
     val pairs = Seq(
       (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (4L, 5L), (5L, 6L), (6L, 7L)).toDF("doc_a", "doc_b")
@@ -443,6 +470,12 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L),
       s"3-core must be exactly the clique with in-core degrees: $got")
     Lineage.release(core3)
+    // round budget: k=2 peels 7, 6, 5 in three rounds and the final
+    // empty-`bad` probe counts as a fourth; a cap of 3 must throw
+    val core2 = KCore.kCore(el, k = 2, maxIters = 4)
+    assert(core2.as[(Long, Long)].collect().toMap == got, "2-core is the same clique")
+    Lineage.release(core2)
+    assertThrows[IllegalStateException](KCore.kCore(el, k = 2, maxIters = 3))
     // k beyond any degree: peeling empties the graph, result has 0 rows
     val core9 = KCore.kCore(el, k = 9)
     assert(core9.isEmpty)

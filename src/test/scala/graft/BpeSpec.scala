@@ -115,8 +115,11 @@ class BpeSpec extends AnyFunSuite {
   test("learnMerges equals a sequential reference learner; learned rules compress the corpus") {
     import spark.implicits._
     val docs = Tables.documents(spark, sf)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val learned = Bpe.learnMerges(docs, "text", nMerges = 16)
     assert(learned.length == 16, s"expected 16 rules, got ${learned.length}")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"learning rounds must free every vocab table's blocks; leaked: $leaked")
 
     // sequential reference: same definition, collections implementation —
     // word-frequency table, overlapping pair counts, count-desc /

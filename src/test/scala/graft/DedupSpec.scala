@@ -287,11 +287,77 @@ class DedupSpec extends AnyFunSuite {
       (30L, 31L), (31L, 32L), (30L, 32L), (32L, 33L)).toDF("doc_a", "doc_b")
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long)].collect().toMap
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val uf = toMap(Dedup.connectedComponents(pairs)) // driver union-find
-    val lp = toMap(Dedup.labelPropComponents(pairs))
-    val pd = toMap(Dedup.pointerDoublingComponents(pairs))
+    val lpFrame = Dedup.labelPropComponents(pairs)
+    val pdFrame = Dedup.pointerDoublingComponents(pairs)
+    val (lp, pd) = (toMap(lpFrame), toMap(pdFrame))
     assert(uf == lp, "union-find vs label-prop")
     assert(uf == pd, "union-find vs pointer doubling")
+    // both distributed loops release every superseded round; releasing
+    // their results leaves the block manager exactly as found
+    graft.operators.Lineage.release(lpFrame)
+    graft.operators.Lineage.release(pdFrame)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"CC loops + release must free every round's blocks; leaked: $leaked")
+  }
+
+  test("round budgets: the smallest maxIters each CC loop needs converges, one fewer throws") {
+    import spark.implicits._
+    import graft.operators.Lineage
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // budgets recorded on these fixed inputs; the no-change probe that
+    // detects the fixpoint counts as a round, so an off-by-one in the
+    // loop condition moves the smallest budget and fails here
+    val chain64 = (1L until 64L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val pd = Dedup.pointerDoublingComponents(chain64, maxIters = 6)
+    assert(pd.as[(Long, Long)].collect().toMap == (1L to 64L).map(_ -> 1L).toMap)
+    Lineage.release(pd)
+    assertThrows[IllegalStateException](
+      Dedup.pointerDoublingComponents(chain64, maxIters = 5))
+    // a 6-node chain: propagation moves the min label one hop per round
+    // (5 rounds) plus the no-change round
+    val chain6 = (1L until 6L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val lp = Dedup.labelPropComponents(chain6, maxIters = 6)
+    assert(lp.as[(Long, Long)].collect().toMap == (1L to 6L).map(_ -> 1L).toMap)
+    Lineage.release(lp)
+    assertThrows[IllegalStateException](
+      Dedup.labelPropComponents(chain6, maxIters = 5))
+    // the throwing runs free their last round too
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"budget runs leaked RDD ids: $leaked")
+  }
+
+  test("Lineage.iterate: probes round 0 without a predecessor, counts steps, stops at the budget") {
+    import spark.implicits._
+    import graft.operators.Lineage
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // one counter row; each step adds 1 and the probe accepts 3, so the
+    // smallest budget is 3 steps
+    def run(maxSteps: Int) = {
+      val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[Long])]
+      val fix = Lineage.iterate(Seq(0L).toDF("v"), maxSteps)(_.select(($"v" + 1).as("v"))) {
+        (state, prev) =>
+          val v = state.as[Long].head()
+          seen += (v -> prev.map(_.as[Long].head()))
+          v >= 3
+      }
+      (fix, seen.toSeq)
+    }
+    val (ok, okSeen) = run(3)
+    assert(ok.converged && ok.steps == 3)
+    assert(okSeen == Seq(0L -> None, 1L -> Some(0L), 2L -> Some(1L), 3L -> Some(2L)))
+    assert(ok.orThrow("unreachable").as[Long].head() == 3L)
+    Lineage.release(ok.state)
+    val (short, shortSeen) = run(2)
+    assert(!short.converged && short.steps == 2 && shortSeen.map(_._1) == Seq(0L, 1L, 2L))
+    val e = intercept[IllegalStateException](short.orThrow("budget 2 is one short"))
+    assert(e.getMessage == "budget 2 is one short")
+    // a negative budget runs no round, not even the round-0 probe
+    val (none, noneSeen) = run(-1)
+    assert(!none.converged && none.steps == 0 && noneSeen.isEmpty)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"iterate + release/orThrow leaked RDD ids: $leaked")
   }
 
   test("Lineage.release frees a cut frame's checkpoint blocks immediately") {

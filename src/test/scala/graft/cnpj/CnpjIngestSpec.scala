@@ -154,6 +154,23 @@ class CnpjIngestSpec extends AnyFunSuite {
     assert(threads.distinct.size >= 2, s"expected concurrent threads, got $threads")
   }
 
+  test("Retry.withBackoff retries an IOException `attempts` times; an interrupt propagates at once") {
+    var calls = 0
+    intercept[java.io.IOException] {
+      Retry.withBackoff(attempts = 3, firstDelayMs = 1) {
+        calls += 1; throw new java.io.IOException("connection reset")
+      }
+    }
+    assert(calls == 3, s"a transient I/O failure gets every attempt; ran $calls")
+    calls = 0
+    intercept[InterruptedException] {
+      Retry.withBackoff(attempts = 3, firstDelayMs = 1) {
+        calls += 1; throw new InterruptedException("cancelled")
+      }
+    }
+    assert(calls == 1, s"an interrupt must not be slept on and retried; ran $calls")
+  }
+
   test("re-run with same site state is a no-op; newer site date re-ingests idempotently") {
     import spark.implicits._
     val second = IngestJob.runWithListing(spark, ListingScraper.parse(html),
