@@ -3,23 +3,6 @@ package graft
 import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
 
-/** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line {"metric":...,"queries":{...}} for the driver.
-  *
-  * Forcing: each query is executed with a noop-sink write
-  * (`df.write.format("noop")`), which computes EVERY output column on the
-  * executors and discards the rows. Unlike `.count()`, Catalyst cannot
-  * prune away the per-row expression work (md5/regex/agg expressions) —
-  * the timed number is the cost of producing the full result.
-  *
-  * Failure tracking: a query that throws records -1.0 (never a partial
-  * elapsed time) and its name is listed in the "errors" field, so a
-  * regression can't masquerade as a speedup.
-  *
-  * Output: the JSON line is written to bench.json in the working
-  * directory AND printed on System.out after spark.stop() — the file is
-  * the robust channel if a log framework prefixes stdout lines.
-  */
 /** The COMPACT artifact line — the one the driver actually parses.
   *
   * The driver's stdout capture keeps only the LAST 2000 chars and parses
@@ -32,10 +15,8 @@ import java.nio.file.{Files, Paths}
   *     the official artifact alone); the min is the code's actual cost
   *     and is what regressions must be judged by. Values are integer
   *     DECISECONDS (see [[fmtDs]]); `"qv":"min_ds"` marks both
-  *     semantics in-band (key shortened from `queries_value` at r15 —
-  *     same marker, 11 chars of registry headroom back). Medians +
-  *     per-rep arrays + per-rep JVM counters stay in the detail line
-  *     (bench.json).
+  *     semantics in-band. Medians + per-rep arrays + per-rep JVM
+  *     counters stay in the detail line (bench.json).
   *   - entries are ordered SLOWEST-FIRST and the map is capped to the
   *     budget: when the registry outgrows the tail window the FASTEST
   *     rows drop first, each omission accounted by `"omitted":K,
@@ -54,17 +35,13 @@ object BenchFormat {
   /** Stay under the driver's 2000-char tail capture. The compact line is
     * always the LAST stdout line, so the tail always contains it whole
     * as long as length + newline fits; the 40-char margin absorbs the
-    * newline plus a log-framework line prefix ("[info] "-sized). Raised
-    * 1900 -> 1948 at r15, -> 1960 at r16 (together with the sf-basename
-    * step below) — the registry crossed its previous 224-row
-    * zero-omission proof at 223 rows.
+    * newline plus a log-framework line prefix ("[info] "-sized).
     */
   val TailBudget = 1960
 
   /** The compact line carries only the BASENAME of the sf dir ("sf0.1")
     * — the full path stays in the detail line; the 15 saved chars are
-    * ~1.5 per-query rows of zero-omission headroom (the r16 capacity
-    * step).
+    * ~1.5 per-query rows of zero-omission headroom.
     */
   def sfLabel(sfDir: String): String = {
     val base = java.nio.file.Paths.get(sfDir).getFileName
@@ -77,12 +54,9 @@ object BenchFormat {
   def shortKey(k: String): String = k.takeWhile(_ != '_').stripPrefix("q")
 
   /** Per-query values are integer DECISECONDS ("113":24 = 2.4 s),
-    * marked in-band by `"queries_value":"min_ds"`. Same 100 ms
-    * resolution the old 1-decimal seconds encoding had under 10 s, but
-    * 1-2 chars cheaper per row ("0.3"->"3", "2.4"->"24") — at a
-    * 190-row registry that buys full per-row tail coverage (omitted: 0)
-    * inside the same budget, and rows >= 10 s get BETTER resolution
-    * (100 ms instead of 1 s). Clamped to 9999 (999.9 s — a query that
+    * marked in-band by `"qv":"min_ds"`: 100 ms resolution at 1-2 chars
+    * per row, which is what keeps a 230-row registry inside the tail
+    * budget with zero omission. Clamped to 9999 (999.9 s — a query that
     * slow at sf0.1 is already a catastrophic regression; the exact
     * magnitude lives in the detail line). Errors stay -1. Full 1 ms
     * precision stays in bench.json; `total`/`total_min` stay seconds.
@@ -90,13 +64,31 @@ object BenchFormat {
   def fmtDs(v: Double): String =
     if (v < 0) "-1" else math.min(math.round(v * 10), 9999L).toString
 
-  /** Min of the successful reps; degenerate rep lists (empty, or every
-    * rep negative) fall back to the median instead of throwing — the
-    * formatter must never be the thing that kills a snapshot write.
+  /** The timing rule: a query's reported value is the median of its
+    * reps, and any failed rep (-1) makes it -1 — never a partial time,
+    * so a regression can't masquerade as a speedup.
     */
-  private def minOf(median: Double, ts: Seq[Double]): Double =
+  def medianOrFailed(reps: Seq[Double]): Double = {
+    val sorted = reps.sorted
+    if (sorted.isEmpty || sorted.head < 0) -1.0 else sorted(sorted.length / 2)
+  }
+
+  /** Per-row min of the successful reps; degenerate rep lists (empty, or
+    * every rep negative) fall back to the median instead of throwing —
+    * the formatter must never be the thing that kills a snapshot write.
+    */
+  def rowMin(median: Double, ts: Seq[Double]): Double =
     if (median < 0) -1.0
     else ts.filter(_ >= 0).minOption.getOrElse(median)
+
+  /** (total, total_min) in seconds over the successful rows: the sum of
+    * medians and the sum of per-row mins. A contended window shows as
+    * total >> total_min. Shared by the detail and the compact line.
+    */
+  def totals(rows: Seq[(String, Double, Seq[Double])]): (Double, Double) = {
+    val ok = rows.filter(_._2 >= 0)
+    (ok.map(_._2).sum, ok.map { case (_, v, ts) => rowMin(v, ts) }.sum)
+  }
 
   /** Cap on named error entries: a mass-failure run (every row
     * erroring) must not push the line past the budget via the errors
@@ -105,190 +97,29 @@ object BenchFormat {
     */
   val MaxNamedErrors = 40
 
-  /** Interleaved-sentinel cadence: one 1-rep reading after every this
-    * many timed registry rows (~0.4 s calm each — ~3.5 s of overhead on
-    * a 209-row run, the price of making mid-run contention attributable
-    * from the artifact instead of from a judge's re-run).
-    */
-  val SentinelEvery = 25
-
-  /** The INTERLEAVED sentinel series as detail-line JSON:
-    * `[[rowsCompleted, seconds], ...]` — one reading before the first
-    * registry row (index 0), one after every [[SentinelEvery]]
-    * rows, one after the last. The round-13 artifacts proved a
-    * first/last pair is blind to mid-run wakes (a co-tenant spiking the
-    * TAIL sentinel after silently inflating a dozen mid-run rows);
-    * with the series, any window of contaminated rows is bracketed by
-    * two sentinel readings and per-row drift is adjudicable from the
-    * artifact alone. A pending/killed reading is -1.
-    */
-  def seriesJson(series: Seq[(Int, Double)]): String =
-    series.map { case (i, v) => f"[$i,$v%.3f]" }.mkString("[", ",", "]")
-
-  /** Contention attribution over the sentinel series: row-index windows
-    * whose BRACKETING readings include a spike (reading > calmFactor ×
-    * the series minimum). Returns merged [fromRow, toRow) ranges —
-    * registry rows inside one are suspect (a co-tenant was provably
-    * awake at a bracket), rows outside have calm brackets on both
-    * sides. Negative (pending) readings are never spiky and never set
-    * the baseline; fewer than two valid readings attribute nothing.
-    */
-  def contendedWindows(series: Seq[(Int, Double)],
-                       calmFactor: Double = 2.0): Seq[(Int, Int)] = {
-    val valid = series.filter(_._2 >= 0)
-    if (valid.size < 2) return Seq.empty
-    val base = valid.map(_._2).min
-    def spiky(v: Double): Boolean = v >= 0 && v > base * calmFactor
-    val flagged = series.sliding(2).collect {
-      case Seq((i1, v1), (i2, v2)) if spiky(v1) || spiky(v2) => (i1, i2)
-    }.toSeq
-    flagged.foldLeft(Vector.empty[(Int, Int)]) {
-      case (acc :+ ((a, b)), (c, d)) if c <= b => acc :+ ((a, math.max(b, d)))
-      case (acc, w) => acc :+ w
-    }
-  }
-
-  /** Bounded retry plan over the contention attribution (the r15
-    * prescription: the artifact should CORRECT for a flagged co-tenant,
-    * not merely confess it): the registry row indices lying inside a
-    * [[contendedWindows]] range, slowest-median-first so the bounded
-    * budget spends itself where a ghost costs most, capped at
-    * `maxRetries`. Rows whose median is -1 are excluded — an error is a
-    * correctness fact, not a timing artifact, and must never be
-    * retried away.
-    */
-  def retryPlan(rows: Seq[(String, Double, Seq[Double])],
-                windows: Seq[(Int, Int)],
-                maxRetries: Int = MaxRetries): Seq[Int] =
-    rows.indices
-      .filter(i => rows(i)._2 >= 0 &&
-        windows.exists { case (a, b) => i >= a && i < b })
-      .sortBy(i => (-rows(i)._2, i))
-      .take(maxRetries)
-
-  /** The ONE retry-pass cap, shared by the window trigger
-    * ([[retryPlan]]'s default) and the unioned plan in Bench.main — a
-    * bare literal in either place would silently starve the other
-    * trigger when someone raises one of them (review r18).
-    */
-  val MaxRetries = 40
-
-  /** Second retry trigger (r17 prescription 6): a row whose run MIN
-    * exceeds this factor times its COMMITTED calm-detail min joins the
-    * retry set even when every sentinel reading stayed calm. The
-    * official r17 artifact carried a 12x q01 spike that sat strictly
-    * between two calm sentinel readings — sentinel bracketing is
-    * structurally blind to a spike shorter than its cadence, but the
-    * row's own history is not.
-    */
-  val HistoryRetryFactor = 4.0
-
-  /** Row indices whose run min exceeds `factor` x the committed calm
-    * min from `history` (query name -> calm min seconds). Rows with no
-    * history NEVER retry on this rule (a new row has no calm baseline
-    * to exceed — ContractSpec pins this), nor do errored rows (-1 is a
-    * correctness fact) or rows with a non-positive history value (a
-    * corrupt baseline must not flag everything). Slowest-first like
-    * [[retryPlan]] so a shared cap spends itself where ghosts cost most.
-    */
-  def historyOutliers(rows: Seq[(String, Double, Seq[Double])],
-                      history: Map[String, Double],
-                      factor: Double = HistoryRetryFactor): Seq[Int] =
-    rows.indices
-      .filter { i =>
-        val (name, med, ts) = rows(i)
-        med >= 0 && history.get(name).exists(h =>
-          h > 0 && minOf(med, ts) > h * factor)
-      }
-      .sortBy(i => (-minOf(rows(i)._2, rows(i)._3), i))
-
-  /** The calm baseline a retry pass compares its probes against: the
-    * minimum VALID (>= 0) sentinel reading of the run. None when every
-    * reading errored — previously unreachable (a nonempty window set
-    * implied valid readings), but the history-outlier trigger can
-    * produce a nonempty retry plan with zero valid sentinel readings,
-    * and a bare `.min` there would kill the bench after all queries ran
-    * (ADVICE r18). The caller skips the retry pass instead — the bench
-    * must never die on its own baseline.
-    */
-  def calmBase(series: Seq[(Int, Double)]): Option[Double] =
-    series.filter(_._2 >= 0).map(_._2).minOption
-
-  /** Merge a retry pass into a row: the retry ran under a verified-calm
-    * sentinel, so a LOWER retry median replaces the original (the
-    * official number converges toward the calm value); a higher one is
-    * kept only in the rep arrays (a retry must never make a row look
-    * slower than its calm cost, and never faster than any honest
-    * measurement). All reps concatenate in execution order — the
-    * detail line shows both passes. An errored original (-1) stays
-    * errored regardless of the retry.
-    */
-  def mergeRetry(origMedian: Double, origReps: Seq[Double],
-                 retryMedian: Double, retryReps: Seq[Double])
-      : (Double, Seq[Double]) = {
-    val reps = origReps ++ retryReps
-    if (origMedian < 0) (-1.0, reps)
-    else if (retryMedian >= 0 && retryMedian < origMedian) (retryMedian, reps)
-    else (origMedian, reps)
-  }
-
-  /** rows = (fullName, medianOrMinus1, perRepSeconds).
-    *
-    * `sentinel`: the CONTENTION CANARY — min deciseconds of a fixed
-    * constant-cost query timed immediately BEFORE the first registry row
-    * and again AFTER the last one. Identical code, identical data, two
-    * timestamps an hour of wall-clock apart: a calm box shows two equal
-    * small numbers; a contended window shows the drift directly, so any
-    * reader can tell "box was busy" from "code got slower" from the
-    * compact line alone (the round-11 official artifact carried 9×
-    * ghosts exactly because this signal didn't exist).
-    *
-    * `sentinelMid`: the MAXIMUM of the interleaved mid-run readings (the
-    * every-[[SentinelEvery]]-rows cadence; -1 before the first one) —
-    * the r14 official artifact read CALM on its [first,last] pair while
-    * a co-tenant inflated a dozen mid-run rows, a shape the boundary
-    * pair structurally cannot see; one more element makes the OFFICIAL
-    * line self-adjudicating (full series stays in the detail line).
-    * Emitted together as `"sentinel_ds":[first,last,midMax]`.
-    */
+  /** rows = (fullName, medianOrMinus1, perRepSeconds). */
   def compactLine(rows: Seq[(String, Double, Seq[Double])], sfDir: String,
-                  budget: Int = TailBudget,
-                  sentinel: Option[(Double, Double)] = None,
-                  sentinelMid: Double = -1.0): String = {
-    val total = rows.map(_._2).filter(_ >= 0).sum
-    val totalMin = rows.collect { case (_, v, ts) if v >= 0 => minOf(v, ts) }.sum
+                  budget: Int = TailBudget): String = {
+    val (total, totalMin) = totals(rows)
     val errKeys = rows.collect { case (k, v, _) if v < 0 => "\"" + shortKey(k) + "\"" }
-    // absent == empty, like the other accounting fields (absence == 0,
-    // ContractSpec-pinned): the 12 chars of a "errors":[] literal are
-    // one more per-query row of zero-omission headroom as the registry
-    // grows (211 rows + the sentinel crossed the budget at r14)
     val errorsField =
       if (errKeys.isEmpty) ""
       else s""""errors":${errKeys.take(MaxNamedErrors).mkString("[", ",", "]")},"""
     val errorsOmitted = (errKeys.size - MaxNamedErrors).max(0)
     // slowest-first by min (errored rows sort last: the errors array
     // already names them, and a -1 carries no timing signal)
-    val ranked = rows.map { case (k, v, ts) => (shortKey(k), minOf(v, ts)) }
+    val ranked = rows.map { case (k, v, ts) => (shortKey(k), rowMin(v, ts)) }
       .sortBy { case (k, mn) => (-mn, k) }
     val entries = ranked.map { case (k, mn) => "\"" + k + "\":" + fmtDs(mn) }
-    val sentinelField = sentinel
-      .map { case (a, b) =>
-        s""""sentinel_ds":[${fmtDs(a)},${fmtDs(b)},${fmtDs(sentinelMid)}],"""
-      }
-      .getOrElse("")
     def lineWith(n: Int): String = {
       val omitted = ranked.drop(n)
       val omittedMax = if (omitted.isEmpty) 0.0 else omitted.map(_._2).max
-      // zero-valued accounting fields are ABSENT (absence == 0,
-      // ContractSpec-pinned): on the common full-coverage run the
-      // ~48 saved chars are 4-5 more per-query rows inside the same
-      // tail budget — what keeps omitted at 0 as the registry grows
       val omittedField =
         if (omitted.isEmpty) ""
         else s""""omitted":${omitted.size},"omitted_max":${fmtDs(omittedMax)},"""
       val errOmittedField =
         if (errorsOmitted == 0) "" else s""""errors_omitted":$errorsOmitted,"""
-      f"""{"metric":"total","value":$total%.1f,"unit":"sec","total_min":$totalMin%.1f,$sentinelField"qv":"min_ds","queries":${entries.take(n).mkString("{", ",", "}")},$omittedField$errorsField$errOmittedField"sf":"${sfLabel(sfDir)}"}"""
+      f"""{"metric":"total","value":$total%.1f,"unit":"sec","total_min":$totalMin%.1f,"qv":"min_ds","queries":${entries.take(n).mkString("{", ",", "}")},$omittedField$errorsField$errOmittedField"sf":"${sfLabel(sfDir)}"}"""
     }
     var n = entries.length
     var line = lineWith(n)
@@ -297,29 +128,33 @@ object BenchFormat {
   }
 }
 
+/** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR
+  * (or the SPARK_GRAFT_BENCH_ONLY subset) and reports it in two JSON
+  * lines: the DETAIL line (medians, mins, per-rep seconds and JVM
+  * counters, full error list) and the [[BenchFormat]] COMPACT line.
+  *
+  * One timing rule: warm up, time each query [[Reps]] times, report
+  * the median ([[BenchFormat.medianOrFailed]]) and the min.
+  *
+  * Forcing: each query is executed with a noop-sink write
+  * (`df.write.format("noop")`), which computes EVERY output column on the
+  * executors and discards the rows. Unlike `.count()`, Catalyst cannot
+  * prune away the per-row expression work (md5/regex/agg expressions) —
+  * the timed number is the cost of producing the full result.
+  *
+  * Output: both lines are written to bench.json in the working directory
+  * after every query, and printed on System.out after spark.stop(),
+  * compact line last — the file is the robust channel if a log framework
+  * prefixes stdout lines.
+  */
 object Bench {
+  /** Timed reps per query; single-shot numbers swing ±25% on a shared
+    * box, the median of three is what the engine actually costs.
+    */
+  private val Reps = 3
+
   private def force(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
-
-  /** Fixed-cost CONTENTION SENTINEL: 300M xxhash64 rows across 32 fixed
-    * partitions — no input data, no shuffle variance, one codegen'd
-    * stage whose cost depends only on available CPU (~0.4 s calm, so a
-    * contended window shows up as a multiple, well above the decisecond
-    * floor). Timed (min of 3) right before the first registry row and
-    * again after the last; the pair lands in the compact line as
-    * `sentinel_ds` so a contended run is self-diagnosing from the
-    * artifact alone.
-    */
-  private[graft] def sentinelMin(spark: org.apache.spark.sql.SparkSession,
-                                 reps: Int = 3): Seq[Double] = {
-    import org.apache.spark.sql.functions.{col, xxhash64}
-    (0 until reps).map { _ =>
-      val t0 = System.nanoTime()
-      force(spark.range(0L, 300000000L, 1L, 32)
-        .select(xxhash64(col("id")).as("h")))
-      (System.nanoTime() - t0) / 1e9
-    }
-  }
 
   /** Cumulative JVM GC time (ms) across all collector beans. */
   private def gcMillis(): Long = {
@@ -356,7 +191,7 @@ object Bench {
     // prefixes ("q24,q25,q130"). Warmup + timed passes both honor it.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-    def selected = only match {
+    val selected = only match {
       case Some(ps) => SparkEntry.allQueries.filter(q => ps.exists(p =>
         q.name == p || q.name.startsWith(p + "_")))
       case None => SparkEntry.allQueries
@@ -367,9 +202,8 @@ object Bench {
     // janino compilation (measured ~2.5 s of one-time compile on some
     // plans). Generated code is keyed by plan shape, so a small dir warms
     // the same compiled classes the timed sfDir run uses. Warmup dir is
-    // derived from sfDir's parent (smallest sf* sibling), overridable via
-    // SPARK_GRAFT_WARM_DIR; falls back to sfDir itself.
-    val warmDir = sys.env.get("SPARK_GRAFT_WARM_DIR").getOrElse {
+    // the smallest sf* sibling of sfDir; falls back to sfDir itself.
+    val warmDir = {
       val parent = Paths.get(sfDir).toAbsolutePath.getParent
       val siblings = Option(parent).map(_.toFile.listFiles()).filter(_ != null)
         .map(_.filter(f => f.isDirectory && f.getName.startsWith("sf")).map(_.getPath))
@@ -395,114 +229,41 @@ object Bench {
     // through the run the warmup exists to stabilize
     graft.queries.QueryCaches.clear()
 
-    // contention sentinel, first reading. One discarded rep first: the
-    // sentinel plan's own codegen compile must not pollute reading #1
-    // (the registry warmup never runs this plan)
-    sentinelMin(spark, reps = 1)
-    val sentinelFirst = sentinelMin(spark)
-    var sentinelLast: Seq[Double] = Seq.empty
-    // the interleaved series: (rows completed, seconds) — first reading
-    // at 0 rows; a 1-rep reading every SentinelEvery rows; last at N
-    val sentinelSeries =
-      scala.collection.mutable.ArrayBuffer((0, sentinelFirst.min))
-
-    // Median of 3 runs per query: single-shot numbers swing ±25% on a
-    // shared box; the median is what the engine actually costs.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // (name, median, repsInEXECUTIONorder, perRepStats)
     val results = scala.collection.mutable.ArrayBuffer
       .empty[(String, Double, Seq[Double], Seq[RepStats])]
-
-    // contention-correcting retry accounting (see the pass below):
-    // name -> (original median, retry-pass median); calm-probe seconds;
-    // rows whose retry was skipped because the box never calmed
-    val retriedRows =
-      scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    var retryCalmS = -1.0
-    var retrySkipped = 0
+    def rows = results.toSeq.map { case (k, v, ts, _) => (k, v, ts) }
 
     def detailLine(): String = {
-      val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-      // per-rep arrays in EXECUTION order + min: box contention swung
-      // identical code 22x between rounds, and the round-8 q25 anomaly
-      // (rep pattern 2.2/2.4/4.4) was only interpretable once order was
-      // known — make scheduling noise AND its position visible in the
-      // artifact itself rather than only in round-over-round medians
-      val qsReps = results.map { case (k, _, ts, _) =>
-        "\"" + k + "\":" + ts.map(t => f"$t%.3f").mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      val qsMin = results.map { case (k, v, ts, _) =>
-        val mn = if (v < 0) -1.0 else ts.filter(_ >= 0).min
-        "\"" + k + "\":" + f"$mn%.3f"
-      }.mkString("{", ",", "}")
+      def obj(kvs: Iterable[(String, String)]): String =
+        kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      def secs(t: Double): String = f"$t%.3f"
+      val qs = obj(results.map { case (k, v, _, _) => k -> secs(v) })
+      val qsMin = obj(results.map { case (k, v, ts, _) =>
+        k -> secs(BenchFormat.rowMin(v, ts)) })
+      // per-rep arrays in EXECUTION order: the round-8 q25 anomaly (rep
+      // pattern 2.2/2.4/4.4) was only interpretable once order was known
+      val qsReps = obj(results.map { case (k, _, ts, _) =>
+        k -> ts.map(secs).mkString("[", ",", "]") })
       // per-rep JVM/engine counters, execution order, aligned with
       // queries_reps: [gc_ms, codegen_count, storage_mb] per rep
-      val qsJvm = results.map { case (k, _, _, ss) =>
-        "\"" + k + "\":" + ss.map(s => s"[${s.gc},${s.cgn},${s.st}]")
-          .mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
+      val qsJvm = obj(results.map { case (k, _, _, ss) =>
+        k -> ss.map(s => s"[${s.gc},${s.cgn},${s.st}]").mkString("[", ",", "]") })
       val errors = results.collect { case (k, v, _, _) if v < 0 => "\"" + k + "\"" }
         .mkString("[", ",", "]")
-      def repArr(ts: Seq[Double]) = ts.map(t => f"$t%.3f").mkString("[", ",", "]")
-      val sentinelJson =
-        s""""sentinel_reps":{"first":${repArr(sentinelFirst)},"last":${repArr(sentinelLast)}},""" +
-          s""""sentinel_series":${BenchFormat.seriesJson(sentinelSeries.toSeq)}"""
-      // retry accounting: absent when no retry ran (absence == none,
-      // the compact-line discipline applied to the detail)
-      val retriedJson =
-        if (retriedRows.isEmpty && retrySkipped == 0) ""
-        else {
-          val rr = retriedRows.map { case (k, (o, n)) =>
-            "\"" + k + "\":" + f"[$o%.3f,$n%.3f]"
-          }.mkString("{", ",", "}")
-          s""""retried_rows":$rr,"retry_calm_s":${f"$retryCalmS%.3f"},""" +
-            (if (retrySkipped > 0) s""""retry_skipped":$retrySkipped,""" else "")
-        }
-      val total = results.map(_._2).filter(_ >= 0).sum
-      // total_min = sum of per-query minima: a contended driver window shows
-      // total >> total_min, making scheduling noise self-diagnosing at the
-      // headline level (not just per-query)
-      val totalMin = results
-        .collect { case (_, v, ts, _) if v >= 0 => ts.filter(_ >= 0).min }.sum
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","total_min":$totalMin%.3f,$sentinelJson,$retriedJson"queries":$qs,"queries_min":$qsMin,"queries_reps":$qsReps,"queries_jvm":$qsJvm,"errors":$errors,"sf":"$sfDir"}"""
+      val (total, totalMin) = BenchFormat.totals(rows)
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","total_min":$totalMin%.3f,"queries":$qs,"queries_min":$qsMin,"queries_reps":$qsReps,"queries_jvm":$qsJvm,"errors":$errors,"sf":"$sfDir"}"""
     }
-    // Compact line for the driver — see BenchFormat (min-valued,
-    // slowest-first, budget-capped; the tail-surviving artifact).
-    // sentinel last reading is -1 until measured: a killed run's final
-    // snapshot self-describes as "second reading never happened". The
-    // third element is the max MID-RUN reading (the interleaved cadence,
-    // strictly between the boundary pair) so the official line shows a
-    // co-tenant that woke mid-run and slept again — the r14 ghost shape.
-    def compactLine(): String = {
-      val mids = sentinelSeries.toSeq
-        .filter { case (i, v) => i > 0 && v >= 0 }
-        .filterNot { case (i, _) => sentinelLast.nonEmpty && i == selected.size }
-        .map(_._2)
-      BenchFormat.compactLine(
-        results.toSeq.map { case (k, v, ts, _) => (k, v, ts) }, sfDir,
-        sentinel = Some((sentinelFirst.min,
-          if (sentinelLast.nonEmpty) sentinelLast.min else -1.0)),
-        sentinelMid = mids.maxOption.getOrElse(-1.0))
-    }
+
     // Snapshot after EVERY timed query: rounds 5 and 6 both lost the whole
     // bench artifact because the driver killed a contended window before
     // the single end-of-run write. Rewriting bench.json and printing the
     // cumulative compact line per query means a killed run still leaves
     // the latest cumulative snapshot as the last parseable stdout line
-    // and on disk; a COMPLETE run's final lines are identical to the old
-    // all-at-once format (the last snapshot covers all queries).
-    def emitSnapshot(): Unit = {
-      val line = detailLine(); val compact = compactLine()
-      try Files.writeString(Paths.get("bench.json"), line + "\n" + compact + "\n")
-      catch { case e: Throwable => System.err.println(s"[bench] bench.json write failed: ${e.getMessage}") }
-      System.out.println(compact)
-      System.out.flush()
-    }
-
-    selected.zipWithIndex.foreach { case (q, qi) =>
+    // and on disk.
+    selected.foreach { q =>
       val stats = scala.collection.mutable.ArrayBuffer.empty[RepStats]
-      val times = (0 until reps).map { _ =>
+      val times = (0 until Reps).map { _ =>
         val gc0 = gcMillis()
         val t0 = System.nanoTime()
         val ok =
@@ -515,124 +276,14 @@ object Bench {
         stats += repStats(gc0)
         if (ok) dt else -1.0
       }
-      val sortedTs = times.sorted
-      // any failed rep poisons the query: report -1, never a partial time
-      val t = if (sortedTs.head < 0) -1.0 else sortedTs(sortedTs.length / 2)
-      results += ((q.name, t, times, stats.toSeq))
-      // interleaved sentinel (1 rep — a cadence reading, not a minimum):
-      // brackets every SentinelEvery-row window so mid-run contention is
-      // attributable from the artifact alone (see BenchFormat.seriesJson)
-      if ((qi + 1) % BenchFormat.SentinelEvery == 0 && qi + 1 < selected.size)
-        sentinelSeries += ((qi + 1, sentinelMin(spark, reps = 1).min))
-      emitSnapshot()
+      results += ((q.name, BenchFormat.medianOrFailed(times), times, stats.toSeq))
+      val compact = BenchFormat.compactLine(rows, sfDir)
+      try Files.writeString(Paths.get("bench.json"), detailLine() + "\n" + compact + "\n")
+      catch { case e: Throwable => System.err.println(s"[bench] bench.json write failed: ${e.getMessage}") }
+      System.out.println(compact)
+      System.out.flush()
     }
-    // contention sentinel, second reading: same fixed work as the first —
-    // the (first, last) pair brackets the whole timed pass
-    sentinelLast = sentinelMin(spark)
-    sentinelSeries += ((selected.size, sentinelLast.min))
-    emitSnapshot()
-    // CONTENTION-CORRECTING RETRY (the r15 prescription — correct for a
-    // flagged co-tenant instead of merely confessing it): rows bracketed
-    // by a spiky sentinel reading re-run ONCE, and only after the box is
-    // verified calm (bounded probes — if it never calms, the retry is
-    // skipped and accounted, never attempted under the same load it is
-    // meant to cancel). A retry can only LOWER a median (mergeRetry);
-    // errors never retry. All accounting lands in the detail line as
-    // retried_rows / retry_calm_s / retry_skipped.
-    // Per-row history baseline for the SECOND retry trigger (r17
-    // prescription 6): committed calm per-row mins, regenerated each
-    // round from the committed detail artifact. A missing or corrupt
-    // file silently disables the rule (logged) — the bench must never
-    // die on its own baseline; a new row absent from the file never
-    // retries on this rule.
-    val historyPath = sys.env.get("SPARK_GRAFT_BENCH_HISTORY")
-      .orElse(Seq("BENCH_HISTORY.json", "/root/repo/BENCH_HISTORY.json")
-        .find(p => Files.exists(Paths.get(p))))
-    val history: Map[String, Double] = historyPath.map { p =>
-      try {
-        val j = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(Files.readAllBytes(Paths.get(p)))
-        // the baseline is SCALE-FACTOR-bound (review r18): calm mins
-        // recorded at sf0.1 would mass-flag a legitimate sf1 run (or
-        // sit inert under sf0.01); a history whose recorded sf differs
-        // from this run's disables the rule, loudly
-        val histSf = j.path("__sf").asText("")
-        if (histSf.nonEmpty && histSf != BenchFormat.sfLabel(sfDir)) {
-          System.err.println(s"[bench] history $p is for $histSf, this " +
-            s"run is ${BenchFormat.sfLabel(sfDir)} — history trigger off")
-          Map.empty[String, Double]
-        } else {
-          import scala.jdk.CollectionConverters._
-          j.fields().asScala
-            .filterNot(_.getKey.startsWith("__"))
-            .map(e => e.getKey -> e.getValue.asDouble(-1.0)).toMap
-        }
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] history $p unreadable: ${e.getMessage}")
-          Map.empty[String, Double]
-      }
-    }.getOrElse(Map.empty)
-
-    val windows = BenchFormat.contendedWindows(sentinelSeries.toSeq)
-    locally {
-      val rowsNow = results.toSeq.map { case (k, v, ts, _) => (k, v, ts) }
-      // union of the two triggers: sentinel-bracketed rows plus per-row
-      // history outliers (a spike the sentinel cadence cannot see);
-      // one shared cap, slowest-first within each trigger
-      val plan = (BenchFormat.retryPlan(rowsNow, windows) ++
-        BenchFormat.historyOutliers(rowsNow, history))
-        .distinct.take(BenchFormat.MaxRetries)
-      if (plan.nonEmpty) {
-        // an all-errored sentinel series has no calm baseline to verify
-        // against — skip (and account) the whole retry pass rather than
-        // dying on `.min` of an empty seq (ADVICE r18; reachable since
-        // the history trigger can plan retries under errored sentinels)
-        val baseOpt = BenchFormat.calmBase(sentinelSeries.toSeq)
-        var calm = -1.0
-        var probes = 0
-        while (baseOpt.nonEmpty && calm < 0 && probes < 5) {
-          probes += 1
-          val r = sentinelMin(spark, reps = 1).min
-          if (r <= baseOpt.get * 2.0) calm = r
-        }
-        if (calm < 0) {
-          retrySkipped = plan.size
-          emitSnapshot()
-        } else {
-          retryCalmS = calm
-          val byIndex = selected
-          plan.foreach { i =>
-            val (name, origMedian, origTimes, origStats) = results(i)
-            val q = byIndex(i)
-            val stats2 = scala.collection.mutable.ArrayBuffer.empty[RepStats]
-            val times2 = (0 until reps).map { _ =>
-              val gc0 = gcMillis()
-              val t0 = System.nanoTime()
-              val ok =
-                try { force(q.run(spark, sfDir)); true }
-                catch { case e: Throwable =>
-                  System.err.println(
-                    s"[bench] retry ${q.name} FAILED: ${e.getMessage}")
-                  false
-                }
-              val dt = (System.nanoTime() - t0) / 1e9
-              stats2 += repStats(gc0)
-              if (ok) dt else -1.0
-            }
-            val sorted2 = times2.sorted
-            val m2 =
-              if (sorted2.head < 0) -1.0 else sorted2(sorted2.length / 2)
-            val (merged, mergedTimes) =
-              BenchFormat.mergeRetry(origMedian, origTimes, m2, times2)
-            results(i) = ((name, merged, mergedTimes, origStats ++ stats2.toSeq))
-            retriedRows(name) = ((origMedian, m2))
-            emitSnapshot()
-          }
-        }
-      }
-    }
-    val line = detailLine(); val compact = compactLine()
+    val line = detailLine(); val compact = BenchFormat.compactLine(rows, sfDir)
     spark.stop()
     // print AFTER stop so no log line can interleave; System.out directly.
     // Detail first, compact LAST: the driver's truncated-tail last-line

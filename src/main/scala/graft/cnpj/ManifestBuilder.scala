@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   *   P2 folder filter → T1 name normalization → P1/P3 whitelist ∩
   *   requested semi-join → T3 date parse + A1 grouped max → T4 URL concat
   *   + A2 collect-list → P4 exists flag (left join vs catalog) → P5 drop
-  *   empty → M3 explode to FileTask.
+  *   empty. Each manifest's `files` are its FileTasks (IngestJob fetches
+  *   them as one Dataset per table).
   *
   * Preserved reference quirks (SURVEY appendix): every file carries the
   * TABLE's max ref_date (#3); requested-but-absent tables vanish silently
@@ -73,11 +74,5 @@ object ManifestBuilder {
           lit(bucketName).as("bucket_name"),
           $"ref_date".as("date"))).as("files"))
       .as[TableManifest]
-  }
-
-  /** M3: manifest → flat Dataset[FileTask] for task-parallel fetching. */
-  def fileTasks(spark: SparkSession, manifest: Dataset[TableManifest]): Dataset[FileTask] = {
-    import spark.implicits._
-    manifest.select(explode($"files").as("f")).select($"f.*").as[FileTask]
   }
 }

@@ -27,13 +27,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * floor) rather than relying on a replayable layout, which is exactly
   * what the specs (and a consumer) check.
   *
-  * This is the aggregate-function form of `operators/SpaceSaving`
-  * (mapPartitions + relational merge): as a TypedImperativeAggregate it
-  * partial-aggregates map-side, the shuffle carries O(k) summaries, and
-  * — the reason it exists — it drops into a STREAMING aggregation as
-  * accumulating state (`EventStream.heavyHitters`), the heavy-hitter
-  * member of the streaming sketch family (KLL quantiles, HLL/bitmap
-  * distinct).
+  * The one Space-Saving implementation: as a
+  * TypedImperativeAggregate it partial-aggregates map-side, the shuffle
+  * carries O(k) summaries, and it drops both into batch queries (q101)
+  * and into a STREAMING aggregation as accumulating state
+  * (`EventStream.heavyHitters`), the heavy-hitter member of the
+  * streaming sketch family (KLL quantiles, HLL/bitmap distinct).
   */
 final class SsSummary(val k: Int) {
   val counts = scala.collection.mutable.HashMap.empty[String, (Long, Long)]

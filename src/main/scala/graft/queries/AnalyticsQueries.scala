@@ -667,7 +667,7 @@ object AnalyticsQueries {
         // scanned twice total (was three times) and never key-shuffled.
         // (For unbounded key spaces the local map becomes a capacity-
         // bounded Space-Saving summary — materialized as
-        // operators/SpaceSaving + q101; the corpus vocabulary here is
+        // functions/SpaceSavingAgg + q101; the corpus vocabulary here is
         // bounded, so a plain map is the honest choice.)
         val tok = Tables.documents(s, d)
           .select(explode(split(lower($"text"), "[^a-z]+")).as("token"))
@@ -1100,24 +1100,27 @@ object AnalyticsQueries {
       "q101_space_saving",
       (s, d) => {
         import s.implicits._
-        // Mergeable Space-Saving summary (capacity 8 per partition) over
-        // the token stream — the operator q84's exact heavy hitters
-        // defers to when the key space is unbounded: O(k) state per
-        // partition, merged relationally into per-key [lb, ub] count
+        // Mergeable Space-Saving summary (capacity 8) over the token
+        // stream — the path q84's exact heavy hitters defers to when the
+        // key space is unbounded: SpaceSavingAgg partial-aggregates O(k)
+        // state map-side and merges it into per-key [lb, ub] count
         // bounds plus the global containment floor (no key above it can
-        // be missed). Bounds are data-dependent on the partition layout,
-        // so this row is rows-only; AnalyticsSpec pins the guarantees
-        // (sandwich on every key, containment on a skewed stream,
-        // degeneration to exact counts when capacity covers the space).
+        // be missed). Bounds depend on the partition layout and merge
+        // order, so this row is rows-only; SpaceSavingAggSpec pins the
+        // guarantees (sandwich on every key of this token stream,
+        // containment on a skewed stream, degeneration to exact counts
+        // when capacity covers the space).
         val tok = Tables.documents(s, d)
           .select(explode(split(lower($"text"), "[^a-z]+")).as("token"))
           .filter($"token" =!= "")
-        graft.operators.SpaceSaving.summarize(tok, "token", 8)
+        tok.agg(graft.functions.SpaceSavingAgg($"token", 8).as("ss"))
+          .select(explode($"ss.entries").as("e"), $"ss.floor".as("floor_total"))
+          .select($"e.key".as("key"), $"e.lb".as("lb"), $"e.ub".as("ub"), $"floor_total")
           .orderBy($"ub".desc, $"lb".desc, $"key")
           .limit(10)
       },
       None,
-      doc = "Space-Saving mergeable top-k summary (ICDT'05 / PODS'12): capacity-8 per-partition counter sets merged into per-key [lb, ub] bounds with a containment floor — the constant-state heavy-hitter path for unbounded key spaces; guarantees pinned in AnalyticsSpec."),
+      doc = "Space-Saving mergeable top-k summary (ICDT'05 / PODS'12): the SpaceSavingAgg aggregate (capacity 8) partial-aggregated map-side and merged into per-key [lb, ub] bounds with a containment floor — the constant-state heavy-hitter path for unbounded key spaces; guarantees pinned in SpaceSavingAggSpec."),
 
     Q(
       "q109_quantile_summary",

@@ -41,7 +41,8 @@ object SimQueries {
         // persist at cluster width (the r19 change-3 discipline, applied
         // to the ANN artifacts in r20): assign() is a pure scan
         // projection, so the cache inherits the one-row-group scan's ONE
-        // partition and every probe's scoring scan ran single-threaded
+        // partition and every probe's scoring scan ran single-threaded.
+        // Keyed by vec_id, not the probes' join key `cluster`: k=16 keys cap the scan at 16 tasks.
         val lists = graft.operators.IvfSearch.assign(corpus, index)
           .repartition(graft.operators.Scatter.cores(s), col("vec_id"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -22,7 +22,7 @@ class ContractSpec extends AnyFunSuite {
     "q59_adpcm_decode",        // lossy integer codec; AdpcmSpec SNR/determinism/drift
     "q75_hll_distinct",        // sketch estimate; DuckDB's approx_distinct is a different sketch — SketchSpec error/determinism
     "q82_phash_neardup",       // DCT perceptual hash: thresholded DCT isn't SQL-expressible — PhashSpec invariance/recall
-    "q101_space_saving",       // bounds depend on partition layout; AnalyticsSpec pins sandwich/containment/exactness
+    "q101_space_saving",       // bounds depend on partition layout; SpaceSavingAggSpec pins sandwich/containment/exactness
     "q109_quantile_summary",   // estimates depend on partition layout; AnalyticsSpec pins error bound/exactness
     "q124_kll_quantiles",      // sketch estimates depend on partition layout; KllSpec pins the certified bound
     "q126_kll_grouped",        // grouped-sketch estimates depend on merge order; KllSpec pins the emitted bound
@@ -131,9 +131,8 @@ class ContractSpec extends AnyFunSuite {
     // (future expensive rows stay anticipated; today's max is 2.42),
     // the rest 0.1–0.9 s — and the padding target moved 218 → 224 → 227 → 233
     // (r17: measured headroom — the realistic model reads 1908 chars at
-    // 233 rows vs the 1960 budget; no format change was needed),
-    // re-proved in BOTH tests (the sentinel-bearing sibling is the
-    // binding one). The line crossed budget at ~211 rows twice, so
+    // 233 rows vs the 1960 budget; no format change was needed).
+    // The line crossed budget at ~211 rows twice, so
     // every capacity step must re-prove the margin here.
     val real = SparkEntry.allQueries.map(_.name)
     val names = real ++ (900 until (900 + (233 - real.size).max(0))).map(i => s"q${i}_headroom")
@@ -149,156 +148,6 @@ class ContractSpec extends AnyFunSuite {
         "the ds-encoding headroom guarantee broke; shrink the format again")
     assert(j.get("queries").size == rows.size)
     assert(j.get("qv").asText == "min_ds")
-  }
-
-  test("BenchFormat: contention sentinel rides the compact line and does not break the zero-omission guarantee") {
-    val real = SparkEntry.allQueries.map(_.name)
-    val names = real ++ (900 until (900 + (233 - real.size).max(0))).map(i => s"q${i}_headroom")
-    val rows = names.zipWithIndex.map { case (n, i) =>
-      // the recalibrated value model (see the sibling test) — THIS
-      // test is the binding one: it carries the sentinel field
-      val v = if (i % 13 == 0) 1.0 + (i % 29) / 10.0 else 0.1 + (i % 9) / 10.0
-      (n, v, Seq(v + 0.2, v, v + 0.5))
-    }
-    val line = BenchFormat.compactLine(rows, "/root/testdata/sf0.1",
-      sentinel = Some((0.73, 0.81)), sentinelMid = 1.27)
-    assert(line.length <= BenchFormat.TailBudget)
-    val j = parse(line)
-    // three readings, deciseconds, same encoding as the per-query
-    // values: [first, last, max-mid-run]. The third element is what
-    // makes the OFFICIAL artifact self-adjudicating against the r14
-    // ghost shape (calm boundary pair, contended middle)
-    val s = j.get("sentinel_ds")
-    assert(s != null && s.size == 3,
-      "sentinel_ds must carry (first, last, midMax)")
-    assert(s.get(0).asInt == 7 && s.get(1).asInt == 8 && s.get(2).asInt == 13)
-    assert(j.get("omitted") == null,
-      "the sentinel field must not push the full-registry model into omission " +
-        "(absent field == zero, the compact line's accounting contract)")
-    // a killed run's snapshot self-describes: last reading still
-    // pending, and no mid reading taken yet -> both -1
-    val killed = parse(BenchFormat.compactLine(rows.take(3), "sf",
-      sentinel = Some((0.73, -1.0))))
-    assert(killed.get("sentinel_ds").get(1).asInt == -1)
-    assert(killed.get("sentinel_ds").get(2).asInt == -1)
-    // absent sentinel -> absent field (synthetic-registry tests unchanged)
-    assert(parse(BenchFormat.compactLine(rows.take(3), "sf")).get("sentinel_ds") == null)
-  }
-
-  test("BenchFormat: interleaved sentinel series — JSON shape, calm/spiky attribution, pending readings") {
-    // format: [[rowsCompleted, seconds], ...] with millisecond precision
-    val s = Seq((0, 0.41), (25, 0.398), (50, -1.0))
-    assert(BenchFormat.seriesJson(s) == "[[0,0.410],[25,0.398],[50,-1.000]]")
-    assert(BenchFormat.seriesJson(Seq.empty) == "[]")
-    // a calm series attributes nothing
-    val calm = Seq((0, 0.40), (25, 0.43), (50, 0.39), (75, 0.41), (100, 0.40))
-    assert(BenchFormat.contendedWindows(calm).isEmpty)
-    // ONE mid-run spike (the round-13 co-tenant shape: calm first/last,
-    // a wake between) flags exactly the two windows it brackets, merged
-    val midSpike = Seq((0, 0.40), (25, 0.41), (50, 1.20), (75, 0.40), (100, 0.41))
-    assert(BenchFormat.contendedWindows(midSpike) == Seq((25, 75)),
-      "rows 25..75 are bracketed by the spiky reading at 50 on one side")
-    // a spiky TAIL (the committed r13 detail's exact signature:
-    // first sentinels calm, last reading 2.55) flags only the tail window
-    val tailSpike = Seq((0, 0.40), (25, 0.39), (50, 0.41), (75, 2.55))
-    assert(BenchFormat.contendedWindows(tailSpike) == Seq((50, 75)))
-    // two separated spikes stay two ranges; adjacent ones merge
-    val twoSpikes = Seq((0, 0.4), (25, 1.9), (50, 0.4), (75, 0.4), (100, 1.3), (125, 0.4))
-    assert(BenchFormat.contendedWindows(twoSpikes) == Seq((0, 50), (75, 125)))
-    // pending (-1) readings never spike and never set the baseline; a
-    // killed run with < 2 valid readings attributes nothing
-    val withPending = Seq((0, 0.40), (25, -1.0), (50, 0.41))
-    assert(BenchFormat.contendedWindows(withPending).isEmpty)
-    assert(BenchFormat.contendedWindows(Seq((0, 0.4), (25, -1.0))).isEmpty)
-    // the factor is a real threshold: 1.9x base stays calm at 2.0
-    val nearMiss = Seq((0, 0.40), (25, 0.76), (50, 0.40))
-    assert(BenchFormat.contendedWindows(nearMiss).isEmpty)
-    assert(BenchFormat.contendedWindows(nearMiss, calmFactor = 1.5) == Seq((0, 50)))
-  }
-
-  test("BenchFormat: retry plan + merge accounting (the contention-correcting pass)") {
-    // a synthetic 6-row registry: rows 0-2 inside a contended window,
-    // rows 3-5 outside; row 1 errored
-    val rows = Seq(
-      ("q1_a", 2.0, Seq(2.0, 2.1, 2.2)),
-      ("q2_b", -1.0, Seq(-1.0, 1.0, 1.0)),
-      ("q3_c", 5.0, Seq(5.0, 5.1, 4.9)),
-      ("q4_d", 9.0, Seq(9.0, 9.1, 9.2)),
-      ("q5_e", 0.3, Seq(0.3, 0.3, 0.3)),
-      ("q6_f", 0.2, Seq(0.2, 0.2, 0.2)))
-    val windows = Seq((0, 3))
-    // slowest-first within the window; the errored row is NEVER planned
-    assert(BenchFormat.retryPlan(rows, windows) == Seq(2, 0))
-    // the cap bounds the pass and spends it on the slowest rows
-    assert(BenchFormat.retryPlan(rows, windows, maxRetries = 1) == Seq(2))
-    // no contended windows -> no plan
-    assert(BenchFormat.retryPlan(rows, Seq.empty).isEmpty)
-    // merge: a calm retry LOWERS the median and concatenates reps
-    assert(BenchFormat.mergeRetry(5.0, Seq(5.0, 5.1), 1.4, Seq(1.4, 1.5)) ==
-      ((1.4, Seq(5.0, 5.1, 1.4, 1.5))))
-    // a slower retry never raises the official number
-    assert(BenchFormat.mergeRetry(2.0, Seq(2.0), 3.0, Seq(3.0))._1 == 2.0)
-    // an errored original stays errored — a retry must not launder -1
-    assert(BenchFormat.mergeRetry(-1.0, Seq(-1.0), 1.0, Seq(1.0))._1 == -1.0)
-    // an errored RETRY leaves the original standing
-    assert(BenchFormat.mergeRetry(2.0, Seq(2.0), -1.0, Seq(-1.0))._1 == 2.0)
-  }
-
-  test("BenchFormat: history-outlier retry trigger (r17 — a 12x spike the calm sentinel bracketing cannot see)") {
-    // the r17 official artifact: q01 min 14.1 s vs a 1.17 s committed
-    // calm baseline, with every sentinel reading calm — the window
-    // trigger never fired. The history trigger flags exactly that row.
-    val rows = Seq(
-      ("q1_a", 14.1, Seq(14.1, 14.3, 14.2)),   // 12x its 1.17 history
-      ("q2_b", 1.0, Seq(1.0, 1.2, 1.1)),       // within 4x of 0.9
-      ("q3_new", 50.0, Seq(50.0, 50.0, 50.0)), // NO history: new rows never retry on this rule
-      ("q4_err", -1.0, Seq(-1.0, 9.9, 9.9)),   // errored: a correctness fact, never retried
-      ("q5_zero", 9.0, Seq(9.0)),              // non-positive history: corrupt baseline, inert
-      ("q6_c", 8.0, Seq(8.0, 2.0, 8.0)))       // MIN is 2.0 <= 4x1.0: min semantics, not median
-    val history = Map("q1_a" -> 1.17, "q2_b" -> 0.9, "q4_err" -> 1.0,
-      "q5_zero" -> 0.0, "q6_c" -> 1.0)
-    assert(BenchFormat.historyOutliers(rows, history) == Seq(0))
-    // the factor is strict: exactly 4x stays calm
-    assert(BenchFormat.historyOutliers(
-      Seq(("q1_a", 4.0, Seq(4.0))), Map("q1_a" -> 1.0)).isEmpty)
-    assert(BenchFormat.historyOutliers(
-      Seq(("q1_a", 4.01, Seq(4.01))), Map("q1_a" -> 1.0)) == Seq(0))
-    // several flagged rows order slowest-first (the shared-cap rule)
-    assert(BenchFormat.historyOutliers(
-      Seq(("q1_a", 5.0, Seq(5.0)), ("q2_b", 50.0, Seq(50.0))),
-      Map("q1_a" -> 1.0, "q2_b" -> 1.0)) == Seq(1, 0))
-    // no committed baseline at all -> the rule is inert, never a crash
-    assert(BenchFormat.historyOutliers(rows, Map.empty).isEmpty)
-  }
-
-  test("BenchFormat: calmBase survives an all-errored sentinel series (ADVICE r18 — the retry pass skips instead of dying)") {
-    // reachable shape: the history trigger plans retries while every
-    // sentinel probe errored — the old inline `.min` threw
-    // UnsupportedOperationException AFTER all queries ran, killing the
-    // artifact on its own baseline
-    assert(BenchFormat.calmBase(Seq((0, -1.0), (5, -1.0), (9, -1.0))).isEmpty)
-    assert(BenchFormat.calmBase(Seq.empty).isEmpty)
-    // valid readings produce the min; pending (-1) readings never set it
-    assert(BenchFormat.calmBase(Seq((0, 0.4), (5, -1.0), (9, 0.3)))
-      .contains(0.3))
-  }
-
-  test("the committed BENCH_HISTORY baseline parses, is SF-stamped, and names only live queries") {
-    // the history trigger silently disarms row-by-row when its keys go
-    // stale (a renamed/removed query never matches) — this makes a
-    // stale committed baseline a loud failure, forcing the documented
-    // regen step (tools/make_history.py) after registry changes
-    val j = parse(java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/repo/BENCH_HISTORY.json")))
-    assert(j.get("__sf") != null && j.get("__sf").asText.startsWith("sf"),
-      "the baseline must record the scale factor it was measured at")
-    import scala.jdk.CollectionConverters._
-    val keys = j.fieldNames.asScala.filterNot(_.startsWith("__")).toSet
-    val names = SparkEntry.allQueries.map(_.name).toSet
-    assert((keys -- names).isEmpty,
-      s"stale history keys (regenerate BENCH_HISTORY.json): ${(keys -- names).take(5)}")
-    // and every recorded min is a usable positive baseline
-    keys.foreach(k => assert(j.get(k).asDouble(-1) > 0, s"$k baseline"))
   }
 
   test("BenchFormat: a mass-failure run still fits the budget with capped, accounted errors") {
@@ -334,5 +183,15 @@ class ContractSpec extends AnyFunSuite {
     assert(a.get("total_min").asDouble == b.get("total_min").asDouble)
     assert(b.get("value").asDouble > a.get("value").asDouble)
     assert(b.get("total_min").asDouble <= b.get("value").asDouble)
+    // the timing rule itself: three good reps report the middle one,
+    // and one failed rep (-1) reports -1, never a partial time
+    val good = Seq(0.9, 0.4, 0.6)
+    val bad = Seq(0.9, -1.0, 0.6)
+    assert(BenchFormat.medianOrFailed(good) == 0.6)
+    assert(BenchFormat.medianOrFailed(bad) == -1.0)
+    val c = parse(BenchFormat.compactLine(Seq(("q1_a", 0.6, good), ("q2_b", -1.0, bad)), "sf"))
+    assert(c.get("value").asDouble == 0.6 && c.get("total_min").asDouble == 0.4)
+    assert(c.get("total_min").asDouble <= c.get("value").asDouble)
+    assert(c.get("queries").get("2").asInt == -1 && c.get("errors").get(0).asText == "2")
   }
 }
