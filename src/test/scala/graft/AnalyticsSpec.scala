@@ -295,6 +295,53 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(z.length == 1 && z(0).getLong(1) >= 0, "unseen key must estimate >= 0")
   }
 
+  test("SpaceSaving: bounds sandwich every true count; skewed heavy hitter cannot be missed; exact at full capacity") {
+    import graft.functions.SpaceSavingAgg
+    import org.apache.spark.sql.{DataFrame, Row}
+    import spark.implicits._
+    // (floor, [(key, lb, ub)]) of the capacity-k summary of `rows`' `key`
+    def summarize(rows: DataFrame, key: String, k: Int): (Long, Seq[(String, Long, Long)]) = {
+      val r = rows.agg(SpaceSavingAgg(col(key), k).as("hh")).select("hh.*").head()
+      (r.getLong(0), r.getSeq[Row](1).map(e => (e.getString(0), e.getLong(1), e.getLong(2))))
+    }
+    val tok = Tables.documents(spark, sf)
+      .select(explode(split(lower(col("text")), "[^a-z]+")).as("token"))
+      .filter(col("token") =!= "")
+    val truth = tok.groupBy(col("token")).agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+    // capacity 8 over a ~31-token vocabulary: heavy eviction churn, and
+    // the [lb, ub] sandwich must still hold for every surviving key
+    val (floor8, rows8) = summarize(tok, "token", 8)
+    assert(rows8.nonEmpty)
+    rows8.foreach { case (k, lb, ub) =>
+      assert(lb <= truth(k), s"$k: lb $lb > true ${truth(k)}")
+      assert(ub >= truth(k), s"$k: ub $ub < true ${truth(k)}")
+    }
+    truth.foreach { case (k, n) =>
+      if (!rows8.exists(_._1 == k)) assert(n <= floor8, s"absent $k: true $n > floor $floor8")
+    }
+
+    // containment: a key holding 50% of a skewed stream sits above the
+    // floor and MUST survive into the merged summary
+    val skewed = ((1 to 500).map(_ => "hot") ++
+        (1 to 100).flatMap(i => Seq.fill(5)(s"cold$i")))
+      .toDF("key").repartition(4)
+    val (floor, sk) = summarize(skewed, "key", 8)
+    assert(500L > floor, s"test graph not skewed enough: floor $floor")
+    val hot = sk.find(_._1 == "hot")
+    assert(hot.isDefined, "the 50% key was evicted - containment guarantee broken")
+    assert(hot.get._2 <= 500L && hot.get._3 >= 500L, s"hot bounds wrong: ${hot.get}")
+
+    // capacity >= cardinality: no evictions anywhere, so lb == ub == truth
+    val (floorExact, exact) = summarize(tok, "token", 1000)
+    assert(floorExact == 0L, s"full-capacity floor $floorExact != 0")
+    assert(exact.map(_._1).toSet == truth.keySet, "full-capacity summary must cover every key")
+    exact.foreach { case (k, lb, ub) =>
+      assert(lb == truth(k) && ub == truth(k), s"$k: ($lb, $ub) != exact ${truth(k)}")
+    }
+  }
+
   test("QuantileSummary: rank estimates are lower bounds within the provable error; exact at full capacity") {
     import graft.operators.QuantileSummary
     import spark.implicits._

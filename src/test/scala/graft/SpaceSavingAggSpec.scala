@@ -13,7 +13,6 @@ import graft.functions.SpaceSavingAgg
   */
 class SpaceSavingAggSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.builder("local[4]").getOrCreate()
-  val sf = "/root/testdata/sf0.001"
 
   // skewed stream: one hot key (10k), 200 tail keys x 10
   private def skewed: Seq[String] =
@@ -50,15 +49,6 @@ class SpaceSavingAggSpec extends AnyFunSuite {
     // from the summary alone: lb > floor
     val hot = entries.find(_._1 == "hot").get
     assert(hot._2 > row.getLong(0), s"hot lb ${hot._2} should exceed floor ${row.getLong(0)}")
-
-    // q101's input: the corpus token stream, capacity 8 over a ~31-token
-    // vocabulary (heavy eviction churn) — the sandwich must still hold
-    val tok = Tables.documents(spark, sf)
-      .select(explode(split(lower(col("text")), "[^a-z]+")).as("token"))
-      .filter(col("token") =!= "")
-    val corpus = tok.agg(SpaceSavingAgg(col("token"), 8).as("hh")).select("hh.*").head()
-    assert(corpus.getSeq[Row](1).nonEmpty)
-    checkGuarantees(corpus, exactCounts(tok.as[String].collect().toSeq))
   }
 
   test("capacity >= key space degenerates to exact counts with floor 0") {
