@@ -644,9 +644,10 @@ object Dedup {
     * q32 (union-find) and q116 (label-prop) pin; q123 pins this path.
     */
   private[graft] def pointerDoublingComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // loop-invariant, scanned twice per round: compacted, so its width
+    // follows its bytes instead of twice the caller's partition count
+    val edges = Lineage.compact(pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
     val init = Lineage.cut(edges.groupBy(col("src").as("doc"))
       .agg(min(col("dst")).as("nmin"))
       .select(col("doc"), least(col("doc"), col("nmin")).as("component")))
@@ -668,7 +669,7 @@ object Dedup {
       prev.exists(parent => next.join(parent.withColumnRenamed("component", "old"), "doc")
         .filter(col("component") =!= col("old")).isEmpty)
     }
-    edges.unpersist()
+    Lineage.release(edges)
     fix.orThrow(s"pointerDoublingComponents did not converge in $maxIters iterations " +
       "— raise maxIters; returning partial labels would silently mislabel survivors")
   }
@@ -680,14 +681,16 @@ object Dedup {
     * converges in log(diameter) rounds instead.
     */
   private[graft] def labelPropComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    // (r19: caching the edges pre-partitioned on dst — to let each
-    // round's join skip an edge-side exchange — was tried and measured
-    // SLOWER: at near-dup-pair volumes the per-round join is a broadcast
-    // hash join with no edge shuffle at all, so the repartition was pure
-    // added cost. The plain cache stays.)
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .cache()
+    // Compacted like pointer doubling's edges: the width follows the
+    // bytes, not the caller. The leaf carries the optimizer's size
+    // estimate, not a cache's measured bytes, so each round is planned
+    // as sort-merge joins that AQE turns into broadcast joins once their
+    // 1-task shuffle stages have run (q116 at sf0.01: 14 -> 17 jobs,
+    // 266 -> 18 tasks). Not hash-partitioned on dst to spare the round's
+    // join an edge exchange (r19): measured SLOWER, since at near-dup
+    // volumes that join is a broadcast hash join anyway.
+    val edges = Lineage.compact(pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
     val init = Lineage.cut(edges.select(col("src").as("doc")).distinct()
       .withColumn("component", col("doc")))
     val fix = Lineage.iterate(init, maxIters) { labels =>
@@ -704,7 +707,7 @@ object Dedup {
           least(col("component"), coalesce(col("nmin"), col("component"))).as("component"),
           (coalesce(col("nmin"), col("component")) < col("component")).as("__chg"))
     } ((next, prev) => prev.isDefined && next.filter(col("__chg")).isEmpty)
-    edges.unpersist()
+    Lineage.release(edges)
     fix.orThrow(s"labelPropComponents did not converge in $maxIters iterations " +
       "(component diameter exceeds maxIters) — raise maxIters; returning " +
       "partial labels would silently mislabel survivors")

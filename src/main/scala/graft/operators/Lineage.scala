@@ -33,7 +33,12 @@ import org.apache.spark.sql.DataFrame
   *     without it a long session accumulates round state in the
   *     checkpoint directory.
   *
-  * Lazy in both modes — the caller's next action materializes the cut.
+  * Only half lazy under AQE (on in every graft session): `cut` builds
+  * the frame's RDD, and adaptive execution runs every shuffle map stage
+  * of the frame right there, as jobs whose call site is `cut` itself.
+  * Only the final stage, the one after the last exchange, waits for the
+  * caller's next action, which computes it and stores the blocks
+  * (reliable mode: writes the files).
   *
   * LIFECYCLE: a cut frame's truth lives in checkpoint blocks that
   * `DataFrame.unpersist()` cannot reach (the plan is a LogicalRDD leaf;
@@ -66,6 +71,26 @@ object Lineage {
       df.checkpoint(false)
     } else df.localCheckpoint(false)
   }
+
+  /** A [[cut]] whose width comes from the frame's bytes, not from the
+    * partition count of whatever produced it. A small frame that is
+    * scanned many times (a shared pair set, a loop's invariant edge
+    * list) otherwise keeps its producer's width: 25 near-dup pairs made
+    * through broadcast joins off a core-wide shingle index sat in 32
+    * partitions, and every scan of them paid 32 tasks. The `rebalance`
+    * hint puts an exchange on top, which AQE coalesces to the partition
+    * count the bytes need (1 for a frame of a few KB); the cut then
+    * freezes that width in the leaf.
+    *
+    * `persist` cannot do this: under Spark's default
+    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false` a
+    * cached plan keeps its output partitioning, so
+    * `hint("rebalance").persist` of those pairs still held 32 partitions
+    * where this cut holds 1. Flipping that conf would tune the whole
+    * session, and `coalesce(n)` would need an `n` guessed or taken from
+    * the core count. Free the result with [[release]], like any cut.
+    */
+  def compact(df: DataFrame): DataFrame = cut(df.hint("rebalance"))
 
   /** Free the checkpoint blocks behind a [[cut]] frame NOW, instead of
     * waiting for the ContextCleaner to notice the frame was
@@ -114,10 +139,17 @@ object Lineage {
     * without running a job.
     *
     * The probe runs the round's one action, and that action must read
-    * `state` — it is what materializes the lazy cut. Then, and not
-    * before, the superseded state is released: its successor's blocks
-    * exist, so nothing reads it any more. `init` is owned by the loop
-    * (released once superseded); the returned state belongs to the
+    * `state`. The cut has already run the shuffle map stages of
+    * `step(prev)` (see the class doc), but not its final stage, and that
+    * stage may still read `prev` directly — as the streamed side of a
+    * broadcast join, say, with no exchange in between. The probe's
+    * action computes the final stage, and a checkpoint completes EVERY
+    * partition at the end of the first job that reads it, even a job
+    * that stops early like `isEmpty` (a local checkpoint computes its
+    * missing partitions then; a reliable one writes them all). Then, and
+    * not before, the superseded state is released: its successor's
+    * blocks exist, so nothing reads it any more. `init` is owned by the
+    * loop (released once superseded); the returned state belongs to the
     * caller, who frees it with [[release]].
     */
   def iterate(init: DataFrame, maxSteps: Int)(step: DataFrame => DataFrame)(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.Tables
-import graft.operators.Dedup
+import graft.operators.{Dedup, Lineage}
 
 /** Dedup queries: exact, n-gram Jaccard, MinHash+LSH, SimHash.
   * The Jaccard brute-force SQL is the oracle for both the exact
@@ -16,9 +16,9 @@ import graft.operators.Dedup
   * dedup family) is materialized ONCE per sf dir and shared by
   * q21/q22/q32, exactly as a cluster pipeline would materialize a shingle
   * table once and run every dedup pass against it. Likewise the t=0.5
-  * Jaccard pair set is shared between q21 and q32. One cache entry per
-  * (session, dir) — nothing accumulates across queries, and the session
-  * teardown releases the storage.
+  * Jaccard pair set is shared by q21 and every row that clusters it.
+  * One cache entry per (session, dir) — nothing accumulates across
+  * queries, and the session teardown releases the storage.
   */
 object DedupQueries {
 
@@ -68,17 +68,19 @@ object DedupQueries {
       })
     }
 
-  /** Exact t=0.5 Jaccard pair set, shared by q21 (reports it) and q32
-    * (clusters it). Tiny output (near-dup pairs), cheap to keep. Routed
-    * by the memoized skew-adaptive strategy: the stats aggregate runs
-    * once per dir and picks naive vs prefix-filtered from the measured
-    * shingle distribution.
+  /** Exact t=0.5 Jaccard pair set, shared by q21 (reports it), the
+    * three CC rows (q32, q116, q123) and the curation manifests (q39,
+    * q200). Routed by the memoized skew-adaptive strategy: the stats
+    * aggregate runs once per dir and picks naive vs prefix-filtered from
+    * the measured shingle distribution. Kept as a [[Lineage.compact]]
+    * leaf, not a persist: the pairs (25 rows at sf0.01) come out of
+    * broadcast joins off the core-wide shingle index and would keep its
+    * 32 partitions, so every consumer's scan paid 32 tasks; compacted
+    * they are 1 partition. Freed with `Lineage.release` in [[clearCaches]].
     */
   private[queries] def sharedPairs(s: SparkSession, d: String): DataFrame = synchronized {
-    pairsCache.getOrElseUpdate((s, d), {
-      Dedup.jaccardPairs(sharedShingles(s, d), 0.5, sharedStrategy(s, d))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    pairsCache.getOrElseUpdate((s, d),
+      Lineage.compact(Dedup.jaccardPairs(sharedShingles(s, d), 0.5, sharedStrategy(s, d))))
   }
 
   private val fpCache =
@@ -131,10 +133,12 @@ object DedupQueries {
     * don't occupy executor storage during measurement.
     */
   private[queries] def clearCaches(): Unit = synchronized {
-    Seq(shingleCache, pairsCache, sigCache, fpCache).foreach { m =>
+    Seq(shingleCache, sigCache, fpCache).foreach { m =>
       m.values.foreach(_.unpersist())
       m.clear()
     }
+    pairsCache.values.foreach(Lineage.release)
+    pairsCache.clear()
     substrSpansCache.values.foreach(_.unpersist())
     substrSpansCache.clear()
     strategyCache.clear()

@@ -450,6 +450,94 @@ class DedupSpec extends AnyFunSuite {
     graft.operators.Lineage.release(labels)
   }
 
+  /** Runs `body` under a listener; returns its result, the stage ids of
+    * each of its jobs in start order, and its finished tasks per stage.
+    * The bus delivers events in order, so a marker job run before and
+    * after `body` fences off the backlog of earlier work and waits for
+    * the last of `body`'s own events.
+    */
+  private def recordTasks[T](body: => T): (T, Seq[Set[Int]], Map[Int, Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+    import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, LinkedBlockingQueue, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val marker = "recordTasks marker"
+    val jobs = new ConcurrentLinkedQueue[(Int, Set[Int])]()
+    val tasks = new ConcurrentLinkedQueue[Int]()
+    val markerJobs = ConcurrentHashMap.newKeySet[Int]()
+    val markersDone = new LinkedBlockingQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == marker))
+          markerJobs.add(j.jobId)
+        else jobs.add((j.jobId, j.stageIds.toSet))
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(j.jobId)) markersDone.add(j.jobId)
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks.add(t.stageId)
+    }
+    def fence(): Unit = {
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(0), 1).count() finally sc.setJobDescription(null)
+      assert(markersDone.poll(60, TimeUnit.SECONDS) != null, "listener bus did not drain")
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence(); jobs.clear(); tasks.clear()
+      val result = body
+      fence()
+      val stages = jobs.asScala.toSeq.sortBy(_._1).map(_._2)
+      val own = stages.flatten.toSet
+      (result, stages,
+        tasks.asScala.toSeq.filter(own).groupBy(identity).map { case (sid, ts) => sid -> ts.size })
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("q123 at sf0.01, warm: at most 32 tasks in all (pair set and CC edges are byte-wide)") {
+    // The near-dup pairs (25 rows here) come out of broadcast joins off
+    // the core-wide shingle index; kept at that width, and doubled by
+    // the edge union, every scan of them cost 64 tasks: 206 tasks per
+    // warm run. Compacted, the whole row is ~14.
+    val q123 = SparkEntry.queries("q123_doubling_components")
+    val dir = "/root/testdata/sf0.01"
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val warm = q123(spark, dir)
+    warm.collect() // builds the shingle index and the pair set
+    // building the frame runs the fixpoint loop, so it is measured too
+    val ((timed, rows), _, tasksByStage) = recordTasks {
+      val df = q123(spark, dir)
+      (df, df.collect())
+    }
+    assert(rows.nonEmpty)
+    val total = tasksByStage.values.sum
+    assert(total <= 32, s"warm q123 ran $total tasks (per stage: $tasksByStage)")
+    // the label leaves belong to the caller; clearCaches frees the
+    // compacted pair set with the rest of the index
+    Seq(warm, timed).foreach(graft.operators.Lineage.release)
+    graft.queries.QueryCaches.clear()
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"QueryCaches.clear left persisted RDD ids: $leaked")
+  }
+
+  test("pointer doubling on a 32-partition pair frame: no stage wider than 4 tasks after the edge cut") {
+    import spark.implicits._
+    val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+      .repartition(32).persist()
+    assert(pairs.count() == 63L)
+    val (labels, jobs, tasksByStage) = recordTasks {
+      val got = Dedup.pointerDoublingComponents(pairs)
+      assert(got.as[(Long, Long)].collect().forall(_._2 == 0L))
+      got
+    }
+    // the first job is the edge cut's exchange, which reads all 32
+    // partitions (twice: both edge directions); what follows reads the cut
+    val edgeCut = jobs.head
+    val after = tasksByStage.filter { case (sid, _) => !edgeCut(sid) }
+    assert(after.nonEmpty && after.values.max <= 4,
+      s"stages after the edge cut, with task counts: $after")
+    graft.operators.Lineage.release(labels)
+    pairs.unpersist()
+  }
+
   test("simhashPairs equals exact brute-force hamming pairs (recall 1 by pigeonhole)") {
     val docs = Tables.documents(spark, sf).limit(100)
     val fps = Dedup.simhashFingerprints(docs, "doc_id", "text").cache()
