@@ -379,7 +379,7 @@ object CorpusBuildJob {
         // would make the move throw FileAlreadyExists — clear it first;
         // safe because the committed scratch is the full union whenever
         // the base lacks _SUCCESS (ADVICE r18)
-        graft.queries.PipelineQueries.deleteRecursively(base)
+        graft.queries.QueryCaches.deleteRecursively(base)
         java.nio.file.Files.move(scratch, base)
       }
       val waveCopies =
@@ -392,7 +392,7 @@ object CorpusBuildJob {
       if (waveCopies.isEmpty && java.nio.file.Files.exists(scratch))
         // a stale scratch beside an intact base (crash after step 1)
         // has nothing to contribute — clear it
-        graft.queries.PipelineQueries.deleteRecursively(scratch)
+        graft.queries.QueryCaches.deleteRecursively(scratch)
       if (waveCopies.nonEmpty) {
         val all = stateTables(spark, lakeDir, name, excludeWave = "")
           .reduce(_.unionByName(_))
@@ -409,9 +409,9 @@ object CorpusBuildJob {
             if (hasDup) all.dropDuplicates("doc_id") else all
           } else all.distinct()
         compacted.write.mode("overwrite").parquet(scratch.toString)
-        graft.queries.PipelineQueries.deleteRecursively(base)
+        graft.queries.QueryCaches.deleteRecursively(base)
         java.nio.file.Files.move(scratch, base)
-        waveCopies.foreach(graft.queries.PipelineQueries.deleteRecursively)
+        waveCopies.foreach(graft.queries.QueryCaches.deleteRecursively)
         results += StageResult(name, base.toString,
           spark.read.parquet(base.toString).count())
       }
@@ -642,7 +642,7 @@ object CorpusBuildJob {
     // feeding future waves a registry this run's manifest ignores
     if (newBenchDir.isEmpty)
       Seq("bench", "retro_contaminated").foreach(n =>
-        graft.queries.PipelineQueries.deleteRecursively(
+        graft.queries.QueryCaches.deleteRecursively(
           java.nio.file.Paths.get(waveDir, n)))
     // within-wave NFC dedup, then the CROSS-WAVE election against the
     // KEY state: a new doc whose canonical text already exists in the

@@ -36,7 +36,7 @@ object Bfs {
     * union, and nothing after it. `unpersist()` cannot free a checkpoint
     * leaf; call [[Lineage.release]] on the result when done (after which
     * the frame is dead). The query layer memoizes ONE result per
-    * (session, dir) and releases it in clearCaches.
+    * (session, dir) and holds it in `QueryCaches`, whose `clear` releases it.
     *
     * Each level's frontier is a [[Lineage.cut]] leaf (see [[Lineage]]
     * for why a cut and not persist), so the accumulated distance vector

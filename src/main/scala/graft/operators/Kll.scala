@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions.col
 import scala.collection.mutable.ArrayBuffer
 
 /** KLL-style UPDATABLE quantile sketch — the streaming member of the
-  * quantile family, next to [[QuantileSummary]] (partition-sort summary,
-  * no per-row update path) and [[Percentiles]] (exact).
+  * quantile family, next to [[Percentiles]] (exact).
   *
   * Structure (Karnin–Lang–Liberty 2016, simplified to fixed per-level
   * capacity à la Manku–Rajagopalan–Lindsay): a stack of buffers where
@@ -32,7 +31,7 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Mergeable: level-wise concatenation + recompaction; bounds add. At
   * cluster scale each partition streams into its own sketch (constant
-  * state, one pass, no sort — unlike QuantileSummary's partition sort)
+  * state, one pass, no sort)
   * and the P sketches merge in partition-id order: deterministic given
   * the partition layout, O(P·k·log n) driver work, nothing unbounded.
   */
@@ -236,7 +235,7 @@ object Kll {
 
   /** One sketch per partition (single streaming pass, constant state, no
     * partition sort), merged on the driver in PARTITION-ID order —
-    * deterministic given the partition layout, like QuantileSummary.
+    * deterministic given the partition layout.
     * Driver state is P bounded sketches (O(k·log n) longs each), the
     * same bounded-collect class as Percentiles' bucket counts.
     */

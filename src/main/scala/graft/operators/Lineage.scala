@@ -47,7 +47,7 @@ import org.apache.spark.sql.DataFrame
   * successor is materialized, so a loop holds at most two rounds of
   * block storage — and its RESULT is itself one cut leaf the caller
   * frees with `Lineage.release(result)` when done (the query layer's
-  * clearCaches does exactly this).
+  * `QueryCaches.hold` registers exactly this for `QueryCaches.clear`).
   */
 object Lineage {
 

@@ -78,8 +78,8 @@ object NgramLm {
     * uni materialized once for the action AND the later score joins —
     * without it, train's count() and every downstream use recompute the
     * full tokenize+aggregate lineage. The caller owns release (the
-    * query layer memoizes per (session, dir) and unpersists in
-    * clearCaches, like every other index artifact).
+    * query layer passes `QueryCaches.persist`, so `QueryCaches.clear`
+    * unpersists both tables like every other index artifact).
     */
   def train(docs: DataFrame, idCol: String = "doc_id",
             textCol: String = "text",

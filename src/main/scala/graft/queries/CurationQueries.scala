@@ -42,31 +42,26 @@ object CurationQueries {
   // (once to build the frequency index, once as the join probe), and an
   // unpersisted frame re-runs the scan+explode for each reference.
   // Memoized + persisted like the other index artifacts (coEdges,
-  // shingle tables) and released via clearCaches; the window/collect_list
-  // single-compute rewrites were evaluated and parked as skew bombs at
-  // scale, so caching the explode is the whole fix.
-  private val bgCache = scala.collection.mutable.Map
-    .empty[(SparkSession, String), DataFrame]
-  private def bigrams(s: SparkSession, d: String): DataFrame = synchronized {
-    bgCache.getOrElseUpdate((s, d), {
-      import s.implicits._
-      Tables.documents(s, d)
-        .select($"doc_id", explode(TextFns.shingles($"text", 2)).as("bg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+  // shingle tables); the window/collect_list single-compute rewrites
+  // were evaluated and parked as skew bombs at scale, so caching the
+  // explode is the whole fix.
+  private val bgCache = QueryCaches.memo[(SparkSession, String), DataFrame]()
+  private def bigrams(s: SparkSession, d: String): DataFrame = bgCache((s, d)) {
+    import s.implicits._
+    QueryCaches.persist(Tables.documents(s, d)
+      .select($"doc_id", explode(TextFns.shingles($"text", 2)).as("bg")))
   }
 
   // q192's LM model per (session, dir): both count tables persisted via
   // train's prepare hook (ONE copy of the construction logic, the
   // bm25Index discipline) so the V action and the score joins share one
-  // tokenize+aggregate pass; released via clearCaches
-  private val lmCache = scala.collection.mutable.Map
-    .empty[(SparkSession, String), graft.operators.NgramLm.Model]
+  // tokenize+aggregate pass
+  private val lmCache =
+    QueryCaches.memo[(SparkSession, String), graft.operators.NgramLm.Model]()
   private def lmModel(s: SparkSession, d: String): graft.operators.NgramLm.Model =
-    synchronized {
-      lmCache.getOrElseUpdate((s, d),
-        graft.operators.NgramLm.train(Tables.documents(s, d), prepare =
-          _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    lmCache((s, d)) {
+      graft.operators.NgramLm.train(Tables.documents(s, d),
+        prepare = QueryCaches.persist)
     }
 
   // per-doc LM score frame per (session, dir): the scored table is
@@ -74,13 +69,10 @@ object CurationQueries {
   // q192 row, the q214 bucketing (which references the frame several
   // times: cutoff selection + final tag), and any threshold filter; one
   // score pass per session instead of one per downstream reference.
-  // Released via clearCaches like the model tables it derives from.
-  private val lmScoreCache = scala.collection.mutable.Map
-    .empty[(SparkSession, String), DataFrame]
-  private def lmScores(s: SparkSession, d: String): DataFrame = synchronized {
-    lmScoreCache.getOrElseUpdate((s, d),
-      graft.operators.NgramLm.score(Tables.documents(s, d), lmModel(s, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  private val lmScoreCache = QueryCaches.memo[(SparkSession, String), DataFrame]()
+  private def lmScores(s: SparkSession, d: String): DataFrame = lmScoreCache((s, d)) {
+    QueryCaches.persist(
+      graft.operators.NgramLm.score(Tables.documents(s, d), lmModel(s, d)))
   }
 
   // the CurationFixture's index artifacts — the t=0.5 pair set (q204 +
@@ -89,23 +81,16 @@ object CurationQueries {
   // the detection passes are the expensive part and the manifests are
   // joins over their output; keyed by session only (the fixture does
   // not vary with the dir)
-  private val fixturePairsCache =
-    scala.collection.mutable.Map.empty[SparkSession, DataFrame]
-  private val fixtureSpansCache =
-    scala.collection.mutable.Map.empty[SparkSession, DataFrame]
-  private def fixturePairs(s: SparkSession): DataFrame = synchronized {
-    fixturePairsCache.getOrElseUpdate(s, {
-      val docs = s.read.parquet(CurationFixture.ensure(s))
-      graft.operators.Dedup.jaccardPairs(
-          graft.operators.Dedup.shingleSets(docs, "doc_id", "text", 3), 0.5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+  private val fixturePairsCache = QueryCaches.memo[SparkSession, DataFrame]()
+  private val fixtureSpansCache = QueryCaches.memo[SparkSession, DataFrame]()
+  private def fixturePairs(s: SparkSession): DataFrame = fixturePairsCache(s) {
+    val docs = s.read.parquet(CurationFixture.ensure(s))
+    QueryCaches.persist(graft.operators.Dedup.jaccardPairs(
+      graft.operators.Dedup.shingleSets(docs, "doc_id", "text", 3), 0.5))
   }
-  private def fixtureSpans(s: SparkSession): DataFrame = synchronized {
-    fixtureSpansCache.getOrElseUpdate(s,
-      graft.operators.SubstrDedup.dupSpans(
-          s.read.parquet(CurationFixture.ensure(s)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  private def fixtureSpans(s: SparkSession): DataFrame = fixtureSpansCache(s) {
+    QueryCaches.persist(graft.operators.SubstrDedup.dupSpans(
+      s.read.parquet(CurationFixture.ensure(s))))
   }
 
   // q212's REFERENCE model: the bigram LM trained on the fixture's
@@ -114,16 +99,14 @@ object CurationQueries {
   // (CCNet trains on Wikipedia and scores the crawl): self-training
   // would hand the 4000-block its own bigrams back at c12 >= 1 and
   // erase the very signal the row exists to record. Memoized + persisted
-  // per session like the other fixture artifacts; released in clearCaches.
+  // per session like the other fixture artifacts.
   private val fixtureLmCache =
-    scala.collection.mutable.Map.empty[SparkSession, graft.operators.NgramLm.Model]
+    QueryCaches.memo[SparkSession, graft.operators.NgramLm.Model]()
   private def fixtureLm(s: SparkSession): graft.operators.NgramLm.Model =
-    synchronized {
-      fixtureLmCache.getOrElseUpdate(s,
-        graft.operators.NgramLm.train(
-          s.read.parquet(CurationFixture.ensure(s)).filter(col("doc_id") < 4000L),
-          prepare =
-            _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    fixtureLmCache(s) {
+      graft.operators.NgramLm.train(
+        s.read.parquet(CurationFixture.ensure(s)).filter(col("doc_id") < 4000L),
+        prepare = QueryCaches.persist)
     }
 
   // q221's input frame — the q214 tag table WITH real BPE token counts
@@ -131,9 +114,8 @@ object CurationQueries {
   // artifact (estimated offline, consumed by every downstream mixing
   // pass), so one tagging+tokenize pass per (session, dir) is the
   // deployment shape; the mixing row measures the budget-sampling pass
-  // over it. Released via clearCaches like the other artifacts.
-  private val bucketTokCache = scala.collection.mutable.Map
-    .empty[(SparkSession, String), DataFrame]
+  // over it.
+  private val bucketTokCache = QueryCaches.memo[(SparkSession, String), DataFrame]()
   /** q221's frozen selection seed — recorded in the persisted mixing
     * allocation so a replayed mix draws the identical ordering.
     */
@@ -147,53 +129,31 @@ object CurationQueries {
     bucketTok(s, d)
 
   private def bucketTok(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      bucketTokCache.getOrElseUpdate((s, d), {
-        val docs = Tables.documents(s, d)
-        val tagged = docs.select(col("doc_id"), col("lang"))
-          .join(lmScores(s, d).select(col("doc_id"), col("avg_millibits")),
-            Seq("doc_id"))
-        // the BPE token count is the artifact build's CPU cost —
-        // Scatter.even widens a narrower-than-the-cluster scan so the
-        // REPLACE-chain tokenizer runs on every core (identity at scale)
-        val counted = graft.operators.Scatter.even(
-            docs.select(col("doc_id"), col("text")), Seq(col("doc_id")))
-          .select(col("doc_id"),
-            graft.operators.Bpe.tokenCount(
-              graft.operators.Bpe.encode(col("text"))).as("n_tok"))
-        ccnetTag(tagged, ccnetCuts(tagged))
-          .join(counted, Seq("doc_id"))
-          .withColumn("token_budget",
-            when(col("bucket") === "head", 6000L)
-              .when(col("bucket") === "middle", 3000L).otherwise(1000L))
-          // NOT repartitioned to cluster width before the persist
-          // (unlike the shingle/minhash index artifacts): measured at
-          // sf0.1, every consumer of this table is shuffle-bound (window
-          // sums, broadcast joins), not per-row-CPU-bound, and a 32-
-          // partition cache added ~0.4 s of per-stage task overhead to
-          // q221/q223 against no win — the coalesced layout is right here
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+    bucketTokCache((s, d)) {
+      val docs = Tables.documents(s, d)
+      val tagged = docs.select(col("doc_id"), col("lang"))
+        .join(lmScores(s, d).select(col("doc_id"), col("avg_millibits")),
+          Seq("doc_id"))
+      // the BPE token count is the artifact build's CPU cost —
+      // Scatter.even widens a narrower-than-the-cluster scan so the
+      // REPLACE-chain tokenizer runs on every core (identity at scale)
+      val counted = graft.operators.Scatter.even(
+          docs.select(col("doc_id"), col("text")), Seq(col("doc_id")))
+        .select(col("doc_id"),
+          graft.operators.Bpe.tokenCount(
+            graft.operators.Bpe.encode(col("text"))).as("n_tok"))
+      // NOT repartitioned to cluster width before the persist
+      // (unlike the shingle/minhash index artifacts): measured at
+      // sf0.1, every consumer of this table is shuffle-bound (window
+      // sums, broadcast joins), not per-row-CPU-bound, and a 32-
+      // partition cache added ~0.4 s of per-stage task overhead to
+      // q221/q223 against no win — the coalesced layout is right here
+      QueryCaches.persist(ccnetTag(tagged, ccnetCuts(tagged))
+        .join(counted, Seq("doc_id"))
+        .withColumn("token_budget",
+          when(col("bucket") === "head", 6000L)
+            .when(col("bucket") === "middle", 3000L).otherwise(1000L)))
     }
-
-  private[queries] def clearCaches(): Unit = synchronized {
-    bgCache.values.foreach(_.unpersist())
-    bgCache.clear()
-    bucketTokCache.values.foreach(_.unpersist())
-    bucketTokCache.clear()
-    lmCache.values.foreach { m => m.unigrams.unpersist(); m.bigrams.unpersist() }
-    lmCache.clear()
-    lmScoreCache.values.foreach(_.unpersist())
-    lmScoreCache.clear()
-    fixtureLmCache.values.foreach { m =>
-      m.unigrams.unpersist(); m.bigrams.unpersist()
-    }
-    fixtureLmCache.clear()
-    Seq(fixturePairsCache, fixtureSpansCache).foreach { m =>
-      m.values.foreach(_.unpersist())
-      m.clear()
-    }
-  }
 
   /** q214's cutoff-estimation half: per-language head/middle tercile
     * cuts of `avg_millibits` over a `(lang, avg_millibits)` frame, via

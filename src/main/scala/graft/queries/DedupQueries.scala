@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.Tables
 import graft.operators.{Dedup, Lineage}
 
@@ -17,21 +16,19 @@ import graft.operators.{Dedup, Lineage}
   * q21/q22/q32, exactly as a cluster pipeline would materialize a shingle
   * table once and run every dedup pass against it. Likewise the t=0.5
   * Jaccard pair set is shared by q21 and every row that clusters it.
-  * One cache entry per (session, dir) — nothing accumulates across
-  * queries, and the session teardown releases the storage.
+  * One memo entry per (session, dir) — nothing accumulates across
+  * queries, and [[QueryCaches.clear]] releases the storage.
   */
 object DedupQueries {
 
-  private val shingleCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  private val pairsCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
+  private val shingleCache = QueryCaches.memo[(SparkSession, String), DataFrame]()
+  private val pairsCache = QueryCaches.memo[(SparkSession, String), DataFrame]()
 
   /** Word-trigram shingle set for `documents` at `d`, materialized once
     * per (session, dir) and shared across the dedup queries.
     */
-  private def sharedShingles(s: SparkSession, d: String): DataFrame = synchronized {
-    shingleCache.getOrElseUpdate((s, d), {
+  private def sharedShingles(s: SparkSession, d: String): DataFrame =
+    shingleCache((s, d)) {
       // persist WIDE (r19): the distinct's AQE-coalesced output is 1-2
       // small partitions, so every consumer's first stage (sketch agg,
       // pair mining, against-probes) ran near-single-threaded off the
@@ -39,13 +36,11 @@ object DedupQueries {
       // cores busy AND already satisfies the per-doc aggregations'
       // clustering (minhash signatures group by doc — no re-exchange).
       val sh = Dedup.shingleSets(Tables.documents(s, d), "doc_id", "text", 3)
-      sh.repartition(graft.operators.Scatter.cores(s), col("doc"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+      QueryCaches.persist(sh.repartition(graft.operators.Scatter.cores(s), col("doc")))
+    }
 
   private val strategyCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), Dedup.JaccardStrategy]
+    QueryCaches.memo[(SparkSession, String), Dedup.JaccardStrategy]()
 
   /** How many times the Σf·(f−1)/2 stats aggregation actually ran —
     * spec-pinned to 1 per (session, dir) so the memoization can't rot.
@@ -58,14 +53,12 @@ object DedupQueries {
     * distribution it measures is a property of the MATERIALIZED index —
     * re-measuring it per query execution is pure waste. One decision per
     * (session, dir), shared by the Jaccard family (sharedPairs) and the
-    * containment row (q183); released with the index in [[clearCaches]].
+    * containment row (q183); dropped with the index by [[QueryCaches.clear]].
     */
   private[graft] def sharedStrategy(s: SparkSession, d: String): Dedup.JaccardStrategy =
-    synchronized {
-      strategyCache.getOrElseUpdate((s, d), {
-        strategyStatsRuns += 1
-        Dedup.chooseJaccardStrategy(sharedShingles(s, d))
-      })
+    strategyCache((s, d)) {
+      strategyStatsRuns += 1
+      Dedup.chooseJaccardStrategy(sharedShingles(s, d))
     }
 
   /** Exact t=0.5 Jaccard pair set, shared by q21 (reports it), the
@@ -76,42 +69,37 @@ object DedupQueries {
     * leaf, not a persist: the pairs (25 rows at sf0.01) come out of
     * broadcast joins off the core-wide shingle index and would keep its
     * 32 partitions, so every consumer's scan paid 32 tasks; compacted
-    * they are 1 partition. Freed with `Lineage.release` in [[clearCaches]].
+    * they are 1 partition. Held by [[QueryCaches]], which frees it.
     */
-  private[queries] def sharedPairs(s: SparkSession, d: String): DataFrame = synchronized {
-    pairsCache.getOrElseUpdate((s, d),
-      Lineage.compact(Dedup.jaccardPairs(sharedShingles(s, d), 0.5, sharedStrategy(s, d))))
-  }
+  private[queries] def sharedPairs(s: SparkSession, d: String): DataFrame =
+    pairsCache((s, d)) {
+      QueryCaches.hold(Lineage.compact(
+        Dedup.jaccardPairs(sharedShingles(s, d), 0.5, sharedStrategy(s, d))))
+    }
 
-  private val fpCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-  private val sigCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
+  private val fpCache = QueryCaches.memo[(SparkSession, String), DataFrame]()
+  private val sigCache = QueryCaches.memo[(SparkSession, String), DataFrame]()
 
   /** MinHash signature table over the shared shingle set, materialized
     * once per (session, dir) — the MinHash family's index artifact.
     */
-  private def sharedSignatures(s: SparkSession, d: String): DataFrame = synchronized {
-    sigCache.getOrElseUpdate((s, d), {
+  private def sharedSignatures(s: SparkSession, d: String): DataFrame =
+    sigCache((s, d)) {
       // persist WIDE like sharedShingles: band mining explodes each
       // signature 32× — off a 1-partition cache that ran single-threaded
       val sig = Dedup.minhashSignatures(sharedShingles(s, d), numHashes = 64)
-      sig.repartition(graft.operators.Scatter.cores(s), col("doc"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+      QueryCaches.persist(sig.repartition(graft.operators.Scatter.cores(s), col("doc")))
+    }
 
   /** SimHash fingerprint table, materialized once per (session, dir) —
     * the fingerprint is the simhash family's per-corpus index artifact;
     * pair mining bands + joins against it.
     */
-  private def sharedFingerprints(s: SparkSession, d: String): DataFrame = synchronized {
-    fpCache.getOrElseUpdate((s, d), {
+  private def sharedFingerprints(s: SparkSession, d: String): DataFrame =
+    fpCache((s, d)) {
       val fp = Dedup.simhashFingerprints(Tables.documents(s, d), "doc_id", "text")
-      fp.repartition(graft.operators.Scatter.cores(s), col("doc"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+      QueryCaches.persist(fp.repartition(graft.operators.Scatter.cores(s), col("doc")))
+    }
 
   // the exact-substring span table over the (scale-independent)
   // SubstrFixture, shared by the q201/q202/q203 trio — the detection
@@ -119,30 +107,12 @@ object DedupQueries {
   // profile/strip rows are aggregations over its output, so one
   // materialization serves all three (the sharedPairs discipline);
   // keyed by session only: the fixture does not vary with the dir
-  private val substrSpansCache =
-    scala.collection.mutable.Map.empty[SparkSession, DataFrame]
-  private def sharedSubstrSpans(s: SparkSession): DataFrame = synchronized {
-    substrSpansCache.getOrElseUpdate(s,
-      graft.operators.SubstrDedup.dupSpans(
-          s.read.parquet(SubstrFixture.ensure(s)))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-  }
-
-  /** Unpersist and drop every memoized artifact (all dirs). Bench calls
-    * this between the warmup and timed passes so warmup-dir artifacts
-    * don't occupy executor storage during measurement.
-    */
-  private[queries] def clearCaches(): Unit = synchronized {
-    Seq(shingleCache, sigCache, fpCache).foreach { m =>
-      m.values.foreach(_.unpersist())
-      m.clear()
+  private val substrSpansCache = QueryCaches.memo[SparkSession, DataFrame]()
+  private def sharedSubstrSpans(s: SparkSession): DataFrame =
+    substrSpansCache(s) {
+      QueryCaches.persist(graft.operators.SubstrDedup.dupSpans(
+        s.read.parquet(SubstrFixture.ensure(s))))
     }
-    pairsCache.values.foreach(Lineage.release)
-    pairsCache.clear()
-    substrSpansCache.values.foreach(_.unpersist())
-    substrSpansCache.clear()
-    strategyCache.clear()
-  }
 
   /** Shared oracle CTE prefix: distinct trigram shingles per doc over a
     * pluggable tokenization (`docsCte` must yield (doc_id, toks)).

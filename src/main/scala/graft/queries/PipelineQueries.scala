@@ -14,49 +14,34 @@ object PipelineQueries {
 
   // language-ID model + prediction frame, memoized per session (the
   // lmModel/lmScores discipline): the fixture never varies, training is
-  // the expensive half, and q219/q220 share the artifacts; released via
-  // clearCaches
-  private val modelCache =
-    scala.collection.mutable.Map.empty[SparkSession, graft.operators.LangId.Model]
+  // the expensive half, and q219/q220 share the artifacts
+  private val modelCache = QueryCaches.memo[SparkSession, graft.operators.LangId.Model]()
   private def langidModel(s: SparkSession): graft.operators.LangId.Model =
-    synchronized {
-      modelCache.getOrElseUpdate(s, {
-        val docs = s.read.parquet(LangIdFixture.ensure(s))
-        graft.operators.LangId.train(
-          docs.filter(col("doc_id") % 1000 < 40 && col("doc_id") < 9000),
-          n = 2,
-          prepare = _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      })
+    modelCache(s) {
+      val docs = s.read.parquet(LangIdFixture.ensure(s))
+      graft.operators.LangId.train(
+        docs.filter(col("doc_id") % 1000 < 40 && col("doc_id") < 9000),
+        n = 2, prepare = QueryCaches.persist)
     }
 
   // the fixture's self-trained bigram LM score frame (the q192 shape on
   // the langid corpus): ONE score pass shared by the q219 tercile
-  // machinery and any reuse; persisted + released like lmScores
-  private val lmCache =
-    scala.collection.mutable.Map.empty[SparkSession, graft.operators.NgramLm.Model]
-  private val lmScoreCache =
-    scala.collection.mutable.Map.empty[SparkSession, DataFrame]
-  private def fixtureLmScores(s: SparkSession): DataFrame = synchronized {
-    lmScoreCache.getOrElseUpdate(s, {
-      val docs = s.read.parquet(LangIdFixture.ensure(s))
-      val m = lmCache.getOrElseUpdate(s, graft.operators.NgramLm.train(docs,
-        prepare = _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-      graft.operators.NgramLm.score(docs, m)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+  // machinery and any reuse; persisted like lmScores
+  private val lmScoreCache = QueryCaches.memo[SparkSession, DataFrame]()
+  private def fixtureLmScores(s: SparkSession): DataFrame = lmScoreCache(s) {
+    val docs = s.read.parquet(LangIdFixture.ensure(s))
+    val m = graft.operators.NgramLm.train(docs, prepare = QueryCaches.persist)
+    QueryCaches.persist(graft.operators.NgramLm.score(docs, m))
   }
 
   // the PREDICTION frame is itself a materialize-once artifact (CCNet
   // computes LID once and stores the assignment as a column; every
   // downstream per-language pass consumes the stored column) — one
   // score+argmin pass per session, shared by q219 and any reuse
-  private val predCache =
-    scala.collection.mutable.Map.empty[SparkSession, DataFrame]
-  private def langidPred(s: SparkSession): DataFrame = synchronized {
-    predCache.getOrElseUpdate(s,
-      graft.operators.LangId.predict(
-          s.read.parquet(LangIdFixture.ensure(s)), langidModel(s))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  private val predCache = QueryCaches.memo[SparkSession, DataFrame]()
+  private def langidPred(s: SparkSession): DataFrame = predCache(s) {
+    QueryCaches.persist(graft.operators.LangId.predict(
+      s.read.parquet(LangIdFixture.ensure(s)), langidModel(s)))
   }
 
   // the q219 output frame is itself a materialize-once artifact (the
@@ -64,77 +49,18 @@ object PipelineQueries {
   // downstream pass); memoized + lineage-cut like the stage finals so
   // a warm read neither re-runs the tercile estimation actions nor
   // re-plans the scoring tree
-  private val langidTagCache =
-    scala.collection.mutable.Map.empty[SparkSession, DataFrame]
-  private def langidTagged(s: SparkSession): DataFrame = synchronized {
-    langidTagCache.getOrElseUpdate(s, {
-      val pred = langidPred(s)
-      val scored = pred.select(col("doc_id"), col("pred_lang").as("lang"))
-        .join(fixtureLmScores(s).select(col("doc_id"), col("avg_millibits")),
-          Seq("doc_id"))
-      cutFinal(CurationQueries.ccnetTag(scored,
-          CurationQueries.ccnetCuts(scored))
-        .join(pred.select(col("doc_id"), col("margin_millibits")),
-          Seq("doc_id"))
-        .select(col("doc_id"), col("lang"), col("margin_millibits"),
-          col("avg_millibits"), col("bucket")))
-    })
-  }
-
-  // Session-scoped scratch ARTIFACT directories created by the memoized
-  // stage builders (the incremental wave's LID/pair dirs, the capstone's
-  // mixing allocation). Tracked here and deleted in [[clearCaches]]
-  // (ADVICE r17: every clear-and-rebuild cycle in a long-lived session
-  // used to leak a fresh set of model/pair dirs on disk). Deletion is
-  // safe exactly when the caches clear: nothing can hold a frame over a
-  // deleted dir once the memoized stages are dropped.
-  private var tempArtifactDirs: Seq[java.nio.file.Path] = Seq.empty
-  private[graft] def trackedTempDirs: Seq[java.nio.file.Path] =
-    synchronized(tempArtifactDirs)
-  private def newTempArtifactDir(prefix: String): String = synchronized {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    tempArtifactDirs = tempArtifactDirs :+ p
-    p.toString
-  }
-  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      // the walk stream must CLOSE (one leaked fd per call otherwise)
-      val walk = java.nio.file.Files.walk(p)
-      val all = try walk.iterator().asScala.toVector finally walk.close()
-      all.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-
-  private[queries] def clearCaches(): Unit = synchronized {
-    tempArtifactDirs.foreach(deleteRecursively)
-    tempArtifactDirs = Seq.empty
-    modelCache.values.foreach { m =>
-      m.counts.unpersist()
-    }
-    modelCache.clear()
-    lmCache.values.foreach { m => m.unigrams.unpersist(); m.bigrams.unpersist() }
-    lmCache.clear()
-    lmScoreCache.values.foreach(_.unpersist())
-    lmScoreCache.clear()
-    predCache.values.foreach(_.unpersist())
-    predCache.clear()
-    stagesPersisted.foreach(_.unpersist())
-    stagesPersisted = Seq.empty
-    stagesCut.foreach(graft.operators.Lineage.release)
-    stagesCut = Seq.empty
-    langidTagCache.clear()
-    stagesCache.clear()
-    multiStagesCache.clear()
-    qualityModelCache.values.foreach(_.counts.unpersist())
-    qualityModelCache.clear()
-    qualityStagesCache.clear()
-    gradedModelCache.values.foreach(_.counts.unpersist())
-    gradedModelCache.clear()
-    gradedStagesCache.clear()
-    jobMixedCache.clear()
-    jobDecontamCache.clear()
-    jobInputsCache.clear()
-    incStagesCache.clear()
+  private val langidTagCache = QueryCaches.memo[SparkSession, DataFrame]()
+  private def langidTagged(s: SparkSession): DataFrame = langidTagCache(s) {
+    val pred = langidPred(s)
+    val scored = pred.select(col("doc_id"), col("pred_lang").as("lang"))
+      .join(fixtureLmScores(s).select(col("doc_id"), col("avg_millibits")),
+        Seq("doc_id"))
+    cutFinal(CurationQueries.ccnetTag(scored,
+        CurationQueries.ccnetCuts(scored))
+      .join(pred.select(col("doc_id"), col("margin_millibits")),
+        Seq("doc_id"))
+      .select(col("doc_id"), col("lang"), col("margin_millibits"),
+        col("avg_millibits"), col("bucket")))
   }
 
   /** The capstone's LM keep threshold. The corpus is small, so absolute
@@ -164,11 +90,8 @@ object PipelineQueries {
   // otherwise re-evaluate the whole mux->demux->extract->clean->dedup
   // upstream once EACH — in deployment every stage output is a
   // materialized lake table, so persistence here is the honest shape,
-  // not a bench trick (the q178 BigLake precedent). Released via
-  // clearCaches.
-  private val stagesCache =
-    scala.collection.mutable.Map.empty[SparkSession, CapstoneStages]
-  private var stagesPersisted: Seq[DataFrame] = Seq.empty
+  // not a bench trick (the q178 BigLake precedent).
+  private val stagesCache = QueryCaches.memo[SparkSession, CapstoneStages]()
 
   // The FINAL frame of each memoized chain gets a LOGICAL lineage cut
   // (Lineage.cut), not just a persist: the chains are hundreds of
@@ -178,24 +101,16 @@ object PipelineQueries {
   // per force with the cache HIT — all driver planning time; 0.05 s
   // once cut). The deterministic ORDER BY is applied on TOP of the cut
   // leaf so the row's explicit ordering stays in its executed plan.
-  // Cut blocks are freed via Lineage.release in clearCaches (unpersist
-  // cannot reach a LogicalRDD leaf).
-  private var stagesCut: Seq[DataFrame] = Seq.empty
-  private def cutFinal(df: DataFrame): DataFrame = synchronized {
-    val c = graft.operators.Lineage.cut(df)
-    stagesCut = stagesCut :+ c
-    c
-  }
+  // The cut is held by QueryCaches (unpersist cannot reach a
+  // LogicalRDD leaf).
+  private def cutFinal(df: DataFrame): DataFrame =
+    QueryCaches.hold(graft.operators.Lineage.cut(df))
   private[graft] def capstoneStages(s: SparkSession): CapstoneStages =
-    synchronized { stagesCache.getOrElseUpdate(s, buildCapstoneStages(s)) }
+    stagesCache(s)(buildCapstoneStages(s))
 
   private def buildCapstoneStages(s: SparkSession): CapstoneStages = {
     import s.implicits._
-    def pin(df: DataFrame): DataFrame = synchronized {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      stagesPersisted = stagesPersisted :+ p
-      p
-    }
+    import QueryCaches.persist
     val fx = s.read.parquet(CapstoneFixture.ensure(s))
     val corpus = fx.filter($"doc_id" < 9000L)
     val bench = fx.filter($"doc_id" >= 9000L).select($"doc_id", $"text")
@@ -230,7 +145,7 @@ object PipelineQueries {
     // 4: NFC canonicalization + exact dedup (md5 election, min id)
     val nfc = cleaned.select($"doc_id",
       graft.functions.NfcNormalize($"text").as("text"))
-    val cur = pin(graft.operators.Dedup.exactDedup(
+    val cur = persist(graft.operators.Dedup.exactDedup(
         nfc.withColumn("__k", md5($"text")), Seq("__k"), Seq($"doc_id"))
       .drop("__k")
       .join(corpus.select($"doc_id", $"lang"), Seq("doc_id"))
@@ -242,17 +157,17 @@ object PipelineQueries {
     val contaminated = graft.operators.TokenDecontam
       .contaminationTokenSpans(cur, bench)
       .select($"doc_id").distinct()
-    val cur2 = pin(cur.join(contaminated, Seq("doc_id"), "left_anti"))
+    val cur2 = persist(cur.join(contaminated, Seq("doc_id"), "left_anti"))
     // 7: the six-signal manifest over the decontaminated corpus
     val pairs = graft.operators.Dedup.jaccardPairs(
       graft.operators.Dedup.shingleSets(cur2, "doc_id", "text", 3), 0.5)
     val lm = graft.operators.NgramLm.score(cur2,
       graft.operators.NgramLm.train(cur2.filter($"doc_id" < 5000L),
-        prepare = pin))
+        prepare = persist))
     val man = CurationQueries.webCurationManifest(cur2, pairs,
       Some(spans), lmScores = Some(lm),
       lmMaxAvgMillibits = CapLmMaxAvgMillibits)
-    val kept = pin(cur2.join(
+    val kept = persist(cur2.join(
       man.filter($"keep" === 1L).select($"doc_id"), Seq("doc_id")))
     // 8: BPE token counts -> prefix-sum packing at budget 1024
     val packable = kept.select($"doc_id",
@@ -302,10 +217,9 @@ object PipelineQueries {
       tagged: DataFrame, mixIn: DataFrame, allocDir: String,
       mixed: DataFrame)
 
-  private val multiStagesCache =
-    scala.collection.mutable.Map.empty[SparkSession, MultiStages]
+  private val multiStagesCache = QueryCaches.memo[SparkSession, MultiStages]()
   private[graft] def multiStages(s: SparkSession): MultiStages =
-    synchronized { multiStagesCache.getOrElseUpdate(s, buildMultiStages(s)) }
+    multiStagesCache(s)(buildMultiStages(s))
 
   /** The q226 chain's stage functions — ONE copy shared by the memoized
     * fixture build ([[buildMultiStages]]) and the dir-parameterized
@@ -501,11 +415,7 @@ object PipelineQueries {
 
   private def buildMultiStages(s: SparkSession): MultiStages = {
     import s.implicits._
-    def pin(df: DataFrame): DataFrame = synchronized {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      stagesPersisted = stagesPersisted :+ p
-      p
-    }
+    import QueryCaches.persist
     // Wenzek et al. 2020 run the published pipeline in exactly this
     // order: crawl -> extraction -> (line clean) -> dedup -> LID ->
     // per-language LM bucketing; mixing consumes the buckets. The LID
@@ -523,17 +433,17 @@ object PipelineQueries {
     // 3: C4 line clean (same rules as the q220 stage)
     val cleaned = MultiChain.c4Clean(extracted)
     // 4: NFC canonicalize + md5 exact-dedup election (min id survives)
-    val cur = pin(MultiChain.nfcDedup(cleaned))
+    val cur = persist(MultiChain.nfcDedup(cleaned))
     // 5: LID + confidence routing (the q222 rule, LENGTH-NORMALIZED —
     // see [[RoutePerGramMillibits]]) — low-confidence docs are 'und'
     // and DROPPED, the casualty class q220 cannot have
-    val pred = pin(graft.operators.LangId.predict(cur, langidModel(s)))
-    val routed = pin(MultiChain.route(cur, pred))
+    val pred = persist(graft.operators.LangId.predict(cur, langidModel(s)))
+    val routed = persist(MultiChain.route(cur, pred))
     // 6: per-PREDICTED-language LM terciles (self-trained on the routed
     // corpus — the q219 shape, keyed on the classifier's output)
     val scored = MultiChain.scoredFrame(routed,
-      MultiChain.lmModel(routed, prepare = pin))
-    val tagged = pin(MultiChain.tagged(scored, MultiChain.cuts(scored)))
+      MultiChain.lmModel(routed, prepare = persist))
+    val tagged = persist(MultiChain.tagged(scored, MultiChain.cuts(scored)))
     // 7: token-budget mixing keyed on (PREDICTED lang, bucket) — the
     // budgets live in a PERSISTED mixing allocation (the r17 artifact,
     // now on the composed chain's own path: cells + seed + tokenizer
@@ -541,7 +451,7 @@ object PipelineQueries {
     // selection replays from the RECORDED seed — a tokenizer-skewed or
     // cell-missing allocation refuses by name inside this chain)
     val mixIn = MultiChain.mixInput(tagged, routed)
-    val allocDir = newTempArtifactDir("mix_alloc")
+    val allocDir = QueryCaches.tempDir("mix_alloc")
     graft.operators.Sampling.saveAllocation(allocDir,
       MultiChain.budgetCells(tagged), Seq("lang", "bucket"),
       "token_budget", seed = MultiChain.MixSeed)
@@ -568,44 +478,37 @@ object PipelineQueries {
   // the trained quality model is memoized separately so the spec's
   // save/load round-trip can reuse it without rebuilding the manifest
   private val qualityModelCache =
-    scala.collection.mutable.Map.empty[SparkSession, graft.operators.LangId.Model]
+    QueryCaches.memo[SparkSession, graft.operators.LangId.Model]()
   private[graft] def qualityModel(s: SparkSession): graft.operators.LangId.Model =
-    synchronized {
-      qualityModelCache.getOrElseUpdate(s, {
-        val fx = s.read.parquet(QualityFixture.ensure(s))
-        graft.operators.LangId.train(
-          fx.filter(col("doc_id") >= 30000L), langCol = "label", n = 2,
-          prepare = _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      })
+    qualityModelCache(s) {
+      val fx = s.read.parquet(QualityFixture.ensure(s))
+      graft.operators.LangId.train(
+        fx.filter(col("doc_id") >= 30000L), langCol = "label", n = 2,
+        prepare = QueryCaches.persist)
     }
 
-  private val qualityStagesCache =
-    scala.collection.mutable.Map.empty[SparkSession, QualityStages]
+  private val qualityStagesCache = QueryCaches.memo[SparkSession, QualityStages]()
   private[graft] def qualityStages(s: SparkSession): QualityStages =
-    synchronized { qualityStagesCache.getOrElseUpdate(s, buildQualityStages(s)) }
+    qualityStagesCache(s)(buildQualityStages(s))
 
   private def buildQualityStages(s: SparkSession): QualityStages = {
     import s.implicits._
-    def pin(df: DataFrame): DataFrame = synchronized {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      stagesPersisted = stagesPersisted :+ p
-      p
-    }
+    import QueryCaches.persist
     val fx = s.read.parquet(QualityFixture.ensure(s))
     // the corpus under curation; its `label` slot carries the language
     // column the manifest records — the good/bad labels live ONLY on
     // the training block (>= 30000), which never enters the manifest
-    val corpus = pin(fx.filter($"doc_id" < 9000L)
+    val corpus = persist(fx.filter($"doc_id" < 9000L)
       .withColumnRenamed("label", "lang"))
     // classifier predictions: pred 'good'/'bad' + margin as the GRADE
     // (FineWeb-Edu publishes a graded score and thresholds it; here the
     // margin in exact integer milli-bits is the grade)
-    val cls = pin(graft.operators.LangId.predict(corpus, qualityModel(s)))
+    val cls = persist(graft.operators.LangId.predict(corpus, qualityModel(s)))
     val pairs = graft.operators.Dedup.jaccardPairs(
       graft.operators.Dedup.shingleSets(corpus, "doc_id", "text", 3), 0.5)
     val spans = graft.operators.SubstrDedup.dupSpans(corpus)
     val lm = graft.operators.NgramLm.score(corpus,
-      graft.operators.NgramLm.train(corpus, prepare = pin))
+      graft.operators.NgramLm.train(corpus, prepare = persist))
     val man6 = CurationQueries.webCurationManifest(corpus, pairs,
       Some(spans), lmScores = Some(lm))
     // the classifier joins as the SEVENTH recorded signal: label +
@@ -628,33 +531,29 @@ object PipelineQueries {
     * lake, and the final lake table read back. Memoized + cut like the
     * other composition finals (in deployment this IS a materialized
     * lake table; the build runs once per session, honest in bench
-    * rep 1). The shards/LID/lake dirs are tracked temp dirs released
-    * by [[clearCaches]].
+    * rep 1). The shards/LID/lake dirs are [[QueryCaches.tempDir]]s,
+    * deleted by [[QueryCaches.clear]].
     */
-  private val jobMixedCache =
-    scala.collection.mutable.Map.empty[SparkSession, DataFrame]
+  private val jobMixedCache = QueryCaches.memo[SparkSession, DataFrame]()
   private[graft] def jobMixed(s: SparkSession): DataFrame =
-    synchronized { jobMixedCache.getOrElseUpdate(s, buildJobMixed(s)) }
+    jobMixedCache(s)(buildJobMixed(s))
 
   // the shard FILES and the persisted router artifact, shared by the
   // q230 and q231 job builds (one mux, one model save per session)
-  private val jobInputsCache =
-    scala.collection.mutable.Map.empty[SparkSession, (String, String)]
-  private def jobInputs(s: SparkSession): (String, String) = synchronized {
-    jobInputsCache.getOrElseUpdate(s, {
-      import s.implicits._
-      val shardsDir = newTempArtifactDir("job_shards")
-      val docs = s.read.parquet(MultiCrawlFixture.ensure(s))
-        .select($"doc_id", $"text").as[(Long, String)].collect().toSeq
-      docs.groupBy(d => Math.floorDiv(d._1, 16L)).foreach { case (sid, recs) =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(shardsDir, f"shard-$sid%05d.warc.gz"),
-          MultiChain.muxShard(recs))
-      }
-      val lidDir = newTempArtifactDir("job_lid")
-      graft.operators.LangId.save(langidModel(s), lidDir)
-      (shardsDir, lidDir)
-    })
+  private val jobInputsCache = QueryCaches.memo[SparkSession, (String, String)]()
+  private def jobInputs(s: SparkSession): (String, String) = jobInputsCache(s) {
+    import s.implicits._
+    val shardsDir = QueryCaches.tempDir("job_shards")
+    val docs = s.read.parquet(MultiCrawlFixture.ensure(s))
+      .select($"doc_id", $"text").as[(Long, String)].collect().toSeq
+    docs.groupBy(d => Math.floorDiv(d._1, 16L)).foreach { case (sid, recs) =>
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(shardsDir, f"shard-$sid%05d.warc.gz"),
+        MultiChain.muxShard(recs))
+    }
+    val lidDir = QueryCaches.tempDir("job_lid")
+    graft.operators.LangId.save(langidModel(s), lidDir)
+    (shardsDir, lidDir)
   }
 
   private def readBackMixed(s: SparkSession, lakeDir: String): DataFrame = {
@@ -667,7 +566,7 @@ object PipelineQueries {
 
   private def buildJobMixed(s: SparkSession): DataFrame = {
     val (shardsDir, lidDir) = jobInputs(s)
-    val lakeDir = newTempArtifactDir("job_lake")
+    val lakeDir = QueryCaches.tempDir("job_lake")
     graft.CorpusBuildJob.run(s, shardsDir, lakeDir, lidDir)
     readBackMixed(s, lakeDir)
   }
@@ -681,15 +580,14 @@ object PipelineQueries {
     * brackets the `benchDir` seam — a decontamination defect mismatches
     * exactly one of the two rows.
     */
-  private val jobDecontamCache =
-    scala.collection.mutable.Map.empty[SparkSession, DataFrame]
+  private val jobDecontamCache = QueryCaches.memo[SparkSession, DataFrame]()
   private[graft] def jobDecontamMixed(s: SparkSession): DataFrame =
-    synchronized { jobDecontamCache.getOrElseUpdate(s, buildJobDecontamMixed(s)) }
+    jobDecontamCache(s)(buildJobDecontamMixed(s))
 
   private def buildJobDecontamMixed(s: SparkSession): DataFrame = {
     import s.implicits._
     val (shardsDir, lidDir) = jobInputs(s)
-    val benchDir = newTempArtifactDir("job_bench")
+    val benchDir = QueryCaches.tempDir("job_bench")
     // lines 2-3 (1-based) of fixture doc 1000 — the same derivation the
     // oracle's jbench CTE replays with (STRING_SPLIT(text))[2:3]
     s.read.parquet(MultiCrawlFixture.ensure(s))
@@ -697,7 +595,7 @@ object PipelineQueries {
       .select(lit(9000001L).as("doc_id"),
         array_join(slice(split($"text", "\n"), 2, 2), "\n").as("text"))
       .write.mode("overwrite").parquet(benchDir)
-    val lakeDir = newTempArtifactDir("job_lake_dc")
+    val lakeDir = QueryCaches.tempDir("job_lake_dc")
     graft.CorpusBuildJob.run(s, shardsDir, lakeDir, lidDir,
       benchDir = Some(benchDir))
     readBackMixed(s, lakeDir)
@@ -719,41 +617,34 @@ object PipelineQueries {
       corpus: DataFrame, cls: DataFrame, manifest: DataFrame)
 
   private val gradedModelCache =
-    scala.collection.mutable.Map.empty[SparkSession, graft.operators.LangId.Model]
+    QueryCaches.memo[SparkSession, graft.operators.LangId.Model]()
   private[graft] def gradedModel(s: SparkSession): graft.operators.LangId.Model =
-    synchronized {
-      gradedModelCache.getOrElseUpdate(s, {
-        val fx = s.read.parquet(GradedQualityFixture.ensure(s))
-        graft.operators.LangId.train(
-          fx.filter(col("doc_id") >= 30000L), langCol = "label", n = 2,
-          prepare = _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      })
+    gradedModelCache(s) {
+      val fx = s.read.parquet(GradedQualityFixture.ensure(s))
+      graft.operators.LangId.train(
+        fx.filter(col("doc_id") >= 30000L), langCol = "label", n = 2,
+        prepare = QueryCaches.persist)
     }
 
-  private val gradedStagesCache =
-    scala.collection.mutable.Map.empty[SparkSession, GradedStages]
+  private val gradedStagesCache = QueryCaches.memo[SparkSession, GradedStages]()
   private[graft] def gradedStages(s: SparkSession): GradedStages =
-    synchronized { gradedStagesCache.getOrElseUpdate(s, buildGradedStages(s)) }
+    gradedStagesCache(s)(buildGradedStages(s))
 
   private def buildGradedStages(s: SparkSession): GradedStages = {
     import s.implicits._
-    def pin(df: DataFrame): DataFrame = synchronized {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      stagesPersisted = stagesPersisted :+ p
-      p
-    }
+    import QueryCaches.persist
     val fx = s.read.parquet(GradedQualityFixture.ensure(s))
-    val corpus = pin(fx.filter($"doc_id" < 9000L)
+    val corpus = persist(fx.filter($"doc_id" < 9000L)
       .withColumnRenamed("label", "lang"))
     // predictions over the 4-class model: the predicted label IS the
     // integer grade (cast exactly on both engines), the margin the
     // classifier's confidence in it
-    val cls = pin(graft.operators.LangId.predict(corpus, gradedModel(s)))
+    val cls = persist(graft.operators.LangId.predict(corpus, gradedModel(s)))
     val pairs = graft.operators.Dedup.jaccardPairs(
       graft.operators.Dedup.shingleSets(corpus, "doc_id", "text", 3), 0.5)
     val spans = graft.operators.SubstrDedup.dupSpans(corpus)
     val lm = graft.operators.NgramLm.score(corpus,
-      graft.operators.NgramLm.train(corpus, prepare = pin))
+      graft.operators.NgramLm.train(corpus, prepare = persist))
     val man6 = CurationQueries.webCurationManifest(corpus, pairs,
       Some(spans), lmScores = Some(lm))
     val manifest = cutFinal(man6
@@ -784,21 +675,16 @@ object PipelineQueries {
       spansInc: DataFrame, tokSpansNewBench: DataFrame,
       finalSpans: DataFrame, manifest: DataFrame)
 
-  private val incStagesCache =
-    scala.collection.mutable.Map.empty[SparkSession, IncrementalStages]
+  private val incStagesCache = QueryCaches.memo[SparkSession, IncrementalStages]()
   private[graft] def incrementalStages(s: SparkSession): IncrementalStages =
-    synchronized { incStagesCache.getOrElseUpdate(s, buildIncrementalStages(s)) }
+    incStagesCache(s)(buildIncrementalStages(s))
 
   private def buildIncrementalStages(s: SparkSession): IncrementalStages = {
     import s.implicits._
-    def pin(df: DataFrame): DataFrame = synchronized {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      stagesPersisted = stagesPersisted :+ p
-      p
-    }
+    import QueryCaches.persist
     val fx = s.read.parquet(IncrementalFixture.ensure(s))
-    val wave1 = pin(fx.filter($"doc_id" < 1000L).select($"doc_id", $"text"))
-    val wave2 = pin(fx.filter($"doc_id" >= 1000L && $"doc_id" < 9000L)
+    val wave1 = persist(fx.filter($"doc_id" < 1000L).select($"doc_id", $"text"))
+    val wave2 = persist(fx.filter($"doc_id" >= 1000L && $"doc_id" < 9000L)
       .select($"doc_id", $"text"))
     val bench1 = fx.filter($"doc_id" >= 9000L && $"doc_id" < 9500L)
       .select($"doc_id", $"text")
@@ -809,26 +695,26 @@ object PipelineQueries {
     // the LID model and the CCNet pair go to manifest-gated dirs; the
     // anchor table and the token-window index are the lake tables their
     // operators document as the incremental state.
-    val lidDir = newTempArtifactDir("incr_lid")
+    val lidDir = QueryCaches.tempDir("incr_lid")
     graft.operators.LangId.save(langidModel(s), lidDir)
-    val anchors1 = pin(graft.operators.SubstrDedup.anchors(wave1))
-    val winIdx1 = pin(graft.operators.TokenDecontam.tokenWindowIndex(wave1))
-    val spansW1 = pin(graft.operators.SubstrDedup.dupSpans(wave1))
-    val tokSpansW1 = pin(graft.operators.TokenDecontam
+    val anchors1 = persist(graft.operators.SubstrDedup.anchors(wave1))
+    val winIdx1 = persist(graft.operators.TokenDecontam.tokenWindowIndex(wave1))
+    val spansW1 = persist(graft.operators.SubstrDedup.dupSpans(wave1))
+    val tokSpansW1 = persist(graft.operators.TokenDecontam
       .contaminationTokenSpans(wave1, bench1))
     // wave-1 routing + the FROZEN serving pair: LID pred keys the cut
     // estimation (the q226 rule — terciles per PREDICTED language), and
     // the pair persists model + cuts together (the CcnetServing shape)
     val lid1 = graft.operators.LangId.load(s, lidDir)
     graft.operators.LangId.requireCompatible(lid1, 2)
-    val predW1 = pin(graft.operators.LangId.predict(wave1, lid1)
+    val predW1 = persist(graft.operators.LangId.predict(wave1, lid1)
       .select($"doc_id", $"pred_lang"))
-    val lmModel1 = graft.operators.NgramLm.train(wave1, prepare = pin)
+    val lmModel1 = graft.operators.NgramLm.train(wave1, prepare = persist)
     val scoredW1 = wave1.join(predW1, Seq("doc_id"))
       .select($"doc_id", $"pred_lang".as("lang"))
       .join(graft.operators.NgramLm.score(wave1, lmModel1)
         .select($"doc_id", $"avg_millibits"), Seq("doc_id"))
-    val pairDir = newTempArtifactDir("incr_pair")
+    val pairDir = QueryCaches.tempDir("incr_pair")
     graft.operators.CcnetServing.save(pairDir,
       graft.operators.TextModelSeam.localize(lmModel1),
       CurationQueries.ccnetCuts(scoredW1))
@@ -840,13 +726,13 @@ object PipelineQueries {
     val pair = graft.operators.CcnetServing.load(s, pairDir)
     val lid2 = graft.operators.LangId.load(s, lidDir)
     graft.operators.LangId.requireCompatible(lid2, 2)
-    val predW2 = pin(graft.operators.LangId.predict(wave2, lid2)
+    val predW2 = persist(graft.operators.LangId.predict(wave2, lid2)
       .select($"doc_id", $"pred_lang"))
-    val spansInc = pin(graft.operators.SubstrDedup.dupSpansAgainst(
+    val spansInc = persist(graft.operators.SubstrDedup.dupSpansAgainst(
       wave2, wave1, anchors1))
-    val finalSpans = pin(graft.operators.SubstrDedup.mergeSpans(
+    val finalSpans = persist(graft.operators.SubstrDedup.mergeSpans(
       spansW1.unionByName(spansInc)))
-    val tokSpansNewBench = pin(graft.operators.TokenDecontam
+    val tokSpansNewBench = persist(graft.operators.TokenDecontam
       .contaminationTokenSpansAgainst(bench2, winIdx1))
     val tokSpansW2 = graft.operators.TokenDecontam
       .contaminationTokenSpans(wave2, bench1.unionByName(bench2))

@@ -504,12 +504,11 @@ object TextQueries {
 
   // learned merges per (session, dir): a driver-resident Seq (tiny);
   // learning is deterministic so memoization is semantics-free
-  private val learnCache = scala.collection.mutable.Map
-    .empty[(org.apache.spark.sql.SparkSession, String), Seq[(String, String)]]
+  private val learnCache =
+    QueryCaches.memo[(org.apache.spark.sql.SparkSession, String), Seq[(String, String)]]()
   private def learnedMerges(s: org.apache.spark.sql.SparkSession, d: String): Seq[(String, String)] =
-    synchronized {
-      learnCache.getOrElseUpdate((s, d),
-        graft.operators.Bpe.learnMerges(Tables.documents(s, d), "text", nMerges = 24))
+    learnCache((s, d)) {
+      graft.operators.Bpe.learnMerges(Tables.documents(s, d), "text", nMerges = 24)
     }
 
   /** Deterministic multilingual fixture for the Unicode tokenizer gate

@@ -342,57 +342,6 @@ class AnalyticsSpec extends AnyFunSuite {
     }
   }
 
-  test("QuantileSummary: rank estimates are lower bounds within the provable error; exact at full capacity") {
-    import graft.operators.QuantileSummary
-    import spark.implicits._
-    val lens = Tables.documents(spark, sf)
-      .select(length(col("text")).cast("long").as("len"))
-    val all = lens.collect().map(_.getLong(0)).sorted
-    val n = all.length.toLong
-    def trueRank(v: Long): Long = { // count of elements <= v
-      var lo = 0; var hi = all.length
-      while (lo < hi) { val m = (lo + hi) >>> 1; if (all(m) <= v) lo = m + 1 else hi = m }
-      lo.toLong
-    }
-
-    val m = 32
-    val summary = QuantileSummary.summarize(lens, "len", m)
-    // provable error: sum over partitions of ceil(np/m)
-    val bound = summary.select(col("pid"), col("np")).distinct()
-      .collect().map(r => (r.getLong(1) + m - 1) / m).sum
-    assert(bound < n / 4, s"test not meaningful: bound $bound vs n $n")
-
-    val est = QuantileSummary.candidateRanks(summary)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(est.nonEmpty)
-    est.foreach { case (v, e) =>
-      val t = trueRank(v)
-      assert(e <= t, s"$v: estimate $e must lower-bound true rank $t")
-      assert(t - e <= bound, s"$v: error ${t - e} exceeds provable bound $bound")
-    }
-
-    // picked quantiles: estimate error and successive-candidate rank gap
-    // are each <= bound, so the chosen value's true rank sits within
-    // 2*bound of the target (and at or above it — lower-bound estimates)
-    QuantileSummary.quantiles(summary, Seq(500, 900, 990)).collect().foreach { r =>
-      val (q, v) = (r.getLong(0), r.getLong(1))
-      val target = (q * n + 999) / 1000
-      assert(trueRank(v) >= target, s"p$q: picked $v below the target rank")
-      assert(trueRank(v) - target <= 2 * bound,
-        s"p$q: picked $v true rank ${trueRank(v)} vs target $target (bound $bound)")
-    }
-
-    // m >= every partition's row count: every position sampled, ranks exact,
-    // and the picked values equal PERCENTILE_DISC at the q107 convention
-    val exactSum = QuantileSummary.summarize(lens, "len", 100000)
-    QuantileSummary.quantiles(exactSum, Seq(500, 900, 990)).collect().foreach { r =>
-      val (q, v, e) = (r.getLong(0), r.getLong(1), r.getLong(2))
-      val target = ((q * n + 999) / 1000).toInt
-      assert(v == all(target - 1), s"p$q: $v != exact disc ${all(target - 1)}")
-      assert(e == trueRank(v), s"p$q: full-capacity estimate $e != true rank")
-    }
-  }
-
   test("Bfs: levels match a sequential BFS recompute; depth cap respected; unreachable absent") {
     import graft.operators.{Bfs, Lineage, PageRank}
     val before = spark.sparkContext.getPersistentRDDs.keySet

@@ -23,7 +23,7 @@ class ContractSpec extends AnyFunSuite {
     "q75_hll_distinct",        // sketch estimate; DuckDB's approx_distinct is a different sketch — SketchSpec error/determinism
     "q82_phash_neardup",       // DCT perceptual hash: thresholded DCT isn't SQL-expressible — PhashSpec invariance/recall
     "q101_space_saving",       // bounds depend on partition layout; SpaceSavingAggSpec pins sandwich/containment/exactness
-    "q109_quantile_summary",   // estimates depend on partition layout; AnalyticsSpec pins error bound/exactness
+    "q109_quantile_summary",   // KllAgg estimates depend on partition layout and merge order; KllSpec pins the certified bound
     "q124_kll_quantiles",      // sketch estimates depend on partition layout; KllSpec pins the certified bound
     "q126_kll_grouped",        // grouped-sketch estimates depend on merge order; KllSpec pins the emitted bound
     "q131_kll_rollup",         // sketch-store rollup likewise; KllSpec pins round-trip + rollup equality

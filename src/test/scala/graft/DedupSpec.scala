@@ -510,8 +510,8 @@ class DedupSpec extends AnyFunSuite {
     assert(rows.nonEmpty)
     val total = tasksByStage.values.sum
     assert(total <= 32, s"warm q123 ran $total tasks (per stage: $tasksByStage)")
-    // the label leaves belong to the caller; clearCaches frees the
-    // compacted pair set with the rest of the index
+    // the label leaves belong to the caller; QueryCaches.clear frees
+    // the compacted pair set with the rest of the index
     Seq(warm, timed).foreach(graft.operators.Lineage.release)
     graft.queries.QueryCaches.clear()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before

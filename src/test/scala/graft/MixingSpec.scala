@@ -337,17 +337,17 @@ class MixingSpec extends AnyFunSuite {
   }
 
   test("session temp artifact dirs are tracked for cleanup; the recursive delete removes a populated dir (ADVICE r17)") {
-    import graft.queries.PipelineQueries
+    import graft.queries.{PipelineQueries, QueryCaches}
     // building the composed chains registers their scratch artifact dirs
-    // (incremental LID/pair, the q226 allocation) with the cache layer —
-    // clearCaches deletes exactly this list, so a clear-and-rebuild
+    // (incremental LID/pair, the q226 allocation) with QueryCaches —
+    // QueryCaches.clear deletes exactly this list, so a clear-and-rebuild
     // cycle in a long-lived session no longer leaks dirs on disk
     val st = PipelineQueries.multiStages(spark)
-    val tracked = PipelineQueries.trackedTempDirs.map(_.toString)
+    val tracked = QueryCaches.trackedTempDirs.map(_.toString)
     assert(tracked.contains(st.allocDir),
       s"the q226 allocation dir must be tracked: $tracked")
     val inc = PipelineQueries.incrementalStages(spark)
-    val tracked2 = PipelineQueries.trackedTempDirs.map(_.toString)
+    val tracked2 = QueryCaches.trackedTempDirs.map(_.toString)
     assert(tracked2.contains(inc.lidDir) && tracked2.contains(inc.pairDir),
       s"the incremental LID/pair dirs must be tracked: $tracked2")
     // the deletion helper itself, on a synthetic populated dir (the
@@ -355,7 +355,7 @@ class MixingSpec extends AnyFunSuite {
     val p = java.nio.file.Files.createTempDirectory("cleanup_probe")
     java.nio.file.Files.createDirectories(p.resolve("sub"))
     java.nio.file.Files.writeString(p.resolve("sub/x.txt"), "y")
-    PipelineQueries.deleteRecursively(p)
+    QueryCaches.deleteRecursively(p)
     assert(!java.nio.file.Files.exists(p))
   }
 
