@@ -3,7 +3,7 @@ package graft.cnpj
 import java.io.{File, FileOutputStream}
 import java.net.URI
 import java.nio.file.{Files, Paths}
-import java.util.zip.ZipFile
+import java.util.zip.{ZipException, ZipFile}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructType}
@@ -13,9 +13,9 @@ import scala.util.control.NonFatal
   * (SURVEY S5/S6/S7, T2/T5, K1-K4, M2, F4).
   *
   * The reference runs one 9 GB lambda per zip (`fetch_data.py:48-88`);
-  * here each FileTask is one Spark task (`mapPartitions` over the
-  * repartitioned task set — SURVEY M2), staging the extracted CSV to
-  * `stagingDir` (shared storage on a real cluster), after which the CSV
+  * here each FileTask is one Spark task (one partition per file, one job
+  * per table — SURVEY M2), staging the extracted CSV to `stagingDir`
+  * (shared storage on a real cluster), after which the CSV
   * reader splits large files across tasks and streams row groups out —
   * the reference's whole-table-in-RAM blowup (README.md:259-265) does
   * not exist here. Task retries come from Spark (F4 analog); driver-side
@@ -25,18 +25,18 @@ object Ingest {
 
   /** S5+S6: download each task's zip and extract the FIRST member only
     * (reference quirk #1, `fetch_data.py:65`: `namelist()[0]`). Returns
-    * (task, stagedCsvPath). Runs as Spark tasks — N files = N tasks.
+    * (task, stagedCsvPath), lazily: collecting it runs one job of
+    * N tasks for N files, with no shuffle.
     */
-  def fetchAndStage(tasks: Dataset[FileTask], stagingDir: String): Dataset[(FileTask, String)] = {
-    val spark = tasks.sparkSession
+  def fetchAndStage(spark: SparkSession, files: Seq[FileTask],
+                    stagingDir: String): Dataset[(FileTask, String)] = {
     import spark.implicits._
-    val n = tasks.count().toInt.max(1)
-    tasks.repartition(n).mapPartitions { it =>
-      it.map { task =>
-        val zipName = task.url.substring(task.url.lastIndexOf('/') + 1)
-        val stem = zipName.split("\\.")(0)
-        val local = new File(stagingDir, zipName)
-        local.getParentFile.mkdirs()
+    spark.sparkContext.parallelize(files, files.size.max(1)).map { task =>
+      val zipName = task.url.substring(task.url.lastIndexOf('/') + 1)
+      val stem = zipName.split("\\.")(0)
+      val local = new File(stagingDir, zipName)
+      local.getParentFile.mkdirs()
+      try {
         Retry.withBackoff(attempts = 3, firstDelayMs = 100) {
           val in = new URI(task.url).toURL.openStream()
           try Files.copy(in, local.toPath,
@@ -44,17 +44,17 @@ object Ingest {
           finally in.close()
         }
         val zf = new ZipFile(local)
-        val csvPath = try {
-          val first = zf.entries().nextElement() // first member ONLY
+        try {
+          val members = zf.entries()
+          if (!members.hasMoreElements) throw new ZipException(s"$zipName has no members")
+          val first = members.nextElement() // first member ONLY
           val out = new File(stagingDir, s"$stem.csv")
           val os = new FileOutputStream(out)
           try zf.getInputStream(first).transferTo(os) finally os.close()
-          out.getAbsolutePath
+          (task, out.getAbsolutePath)
         } finally zf.close()
-        local.delete() // K4 scratch cleanup
-        (task, csvPath)
-      }
-    }
+      } finally local.delete() // K4: a failed download or a bad zip leaves no scratch either
+    }.toDS()
   }
 
   /** S7+T2+T5: headerless `;`-separated latin-1 CSV with the declared

@@ -9,9 +9,9 @@ import org.apache.spark.sql.SparkSession
   * of the reference's whole state machine.
   *
   *   listTables (S3) → scrape+parse listing (S1/S2) → manifest build
-  *   (check_update ops) → per-table freshness gate (F1-F3) → per-file
-  *   fetch tasks (M2) → CSV decode (S7/T2/T5) → partitioned lake write
-  *   (K1/K2) → catalog sync (K5).
+  *   (check_update ops, driver code) → per-table freshness gate (F1-F3)
+  *   → per-file fetch tasks, one job per table (M2) → CSV decode
+  *   (S7/T2/T5) → partitioned lake write (K1/K2) → catalog sync (K5).
   *
   * Table-level Map (M1): tables are processed CONCURRENTLY on a bounded
   * pool (reference fans out all tables via the INLINE Map state,
@@ -66,8 +66,8 @@ object IngestJob {
 
     require(maxConcurrentTables >= 1,
       s"maxConcurrentTables must be >= 1; got $maxConcurrentTables")
-    val manifest = ManifestBuilder.build(spark, listing, requestedTables,
-      tablesInCatalog, bucketName, repositoryUrl).collect().toSeq
+    val manifest = ManifestBuilder.manifests(listing, requestedTables,
+      tablesInCatalog, bucketName, repositoryUrl)
     if (manifest.isEmpty) return Seq.empty
 
     processingThreads.clear()
@@ -99,7 +99,7 @@ object IngestJob {
       if (!stale) TableResult(tm.name, updated = false, 0L, None)
       else {
         val staged = Ingest.fetchAndStage(
-          spark.createDataset(tm.files), s"$stagingDir/${tm.name}").collect() // M2
+          spark, tm.files, s"$stagingDir/${tm.name}").collect() // M2
         try {
           val df = Ingest.readCsv(spark, tm.name, staged.map(_._2).toSeq)
           Ingest.writeSnapshot(df, lakeRoot, tm.name, tm.ref_date)

@@ -8,8 +8,8 @@ import java.time.Duration
   *
   * Control-plane code: the listing is a few hundred rows, so it runs on
   * the driver (reference runs it in a 15 s-timeout lambda,
-  * `check_update.py:94-96`, `cnpj_infra_template.yml:135`) and is then
-  * materialized to a Dataset for the manifest build.
+  * `check_update.py:94-96`, `cnpj_infra_template.yml:135`), as does the
+  * manifest build that reads it.
   *
   * The parser extracts, per `<tr>`: the icon `src` (folder-skip signal),
   * the anchor href + text (file name), and the last-modified cell —

@@ -1,18 +1,18 @@
 package graft.cnpj
 
+import java.util.Locale
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Manifest build: listing → per-table download manifest (SURVEY §3.3).
   *
-  * Re-expresses the reference's dict-juggling (`check_update.py:24-92`)
-  * as declarative Dataset ops — the engine dogfoods itself on its own
-  * metadata:
-  *   P2 folder filter → T1 name normalization → P1/P3 whitelist ∩
-  *   requested semi-join → T3 date parse + A1 grouped max → T4 URL concat
-  *   + A2 collect-list → P4 exists flag (left join vs catalog) → P5 drop
-  *   empty. Each manifest's `files` are its FileTasks (IngestJob fetches
-  *   them as one Dataset per table).
+  * Driver code, as in the reference (`check_update.py:24-92`): the
+  * listing is a few hundred rows, so the rules run over Scala collections
+  * and submit no Spark job:
+  *   P2 folder filter → T1 name normalization → T3 date parse → P1/P3
+  *   whitelist ∩ requested (each name once) → P4 exists flag → A1
+  *   table-level max date → T4 URL concat + A2 file list → P5 drop
+  *   tables with no file. Each manifest's `files` are its FileTasks
+  *   (IngestJob fetches each table's files in one Spark job).
   *
   * Preserved reference quirks (SURVEY appendix): every file carries the
   * TABLE's max ref_date (#3); requested-but-absent tables vanish silently
@@ -20,15 +20,45 @@ import org.apache.spark.sql.functions._
   */
 object ManifestBuilder {
 
-  /** T1: `Empresas0.zip` → `empresas` (lower, pre-dot, alpha-only;
-    * reference `check_update.py:55-60`).
+  /** T1: `Empresas0.zip` → `empresas`: the part before the first dot,
+    * lower-cased, letters a-z only (reference `check_update.py:55-60`).
     */
-  val normalizeName: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-    c => regexp_replace(lower(expr_predot(c)), "[^a-z]", "")
+  def normalizeName(fileName: String): String =
+    fileName.takeWhile(_ != '.').toLowerCase(Locale.ROOT).filter(c => c >= 'a' && c <= 'z')
 
-  private def expr_predot(c: org.apache.spark.sql.Column) =
-    split_part(c, lit("."), lit(1))
+  /** T3: `"2023-05-16 09:18"` → 20230516: the first 10 characters without
+    * their dashes, trimmed, read as an int (an optional '+', ASCII digits
+    * only). None when that is no number: nav/header rows have no date
+    * (the reference skips them positionally).
+    */
+  def fileDate(lastModified: String): Option[Int] = {
+    val s = lastModified.take(10).replace("-", "").trim
+    if (s.stripPrefix("+").forall(c => c >= '0' && c <= '9')) s.toIntOption else None
+  }
 
+  /** The manifest of each requested table found in `listing`, in request order. */
+  def manifests(
+      listing: Seq[ListingEntry],
+      requestedTables: Seq[String],
+      tablesInCatalog: Set[String],
+      bucketName: String,
+      repositoryUrl: String): Seq[TableManifest] = {
+    val filesByTable = listing
+      .filterNot(_.iconSrc.contains("folder")) // P2
+      .flatMap(e => fileDate(e.lastModified).map(d => (normalizeName(e.fileName), e.href, d)))
+      .groupBy(_._1)
+    requestedTables.distinct
+      .filter(Schemas.AllowedTableNames.contains) // P1
+      .flatMap(name => filesByTable.get(name).map { files => // P3; P5 drops absent tables
+        val refDate = files.map(_._3).max // A1
+        // quirk #3: every file carries the table-level max ref_date
+        val tasks = files.map { case (_, href, _) => // A2
+          FileTask(repositoryUrl + href, name, bucketName, refDate) } // T4
+        TableManifest(name, tablesInCatalog(name), tasks, refDate) // P4
+      })
+  }
+
+  /** [[manifests]] as a Dataset. */
   def build(
       spark: SparkSession,
       listing: Seq[ListingEntry],
@@ -37,42 +67,6 @@ object ManifestBuilder {
       bucketName: String,
       repositoryUrl: String): Dataset[TableManifest] = {
     import spark.implicits._
-
-    val existsCol =
-      if (tablesInCatalog.isEmpty) lit(false)
-      else $"name".isin(tablesInCatalog.toSeq: _*)
-    val requested = requestedTables.toDF("name")
-      .filter($"name".isin(Schemas.AllowedTableNames: _*)) // P1 whitelist
-      .withColumn("exists", existsCol) // P4
-
-    val files = listing.toDS()
-      .filter(!$"iconSrc".contains("folder")) // P2 folder-row filter
-      .withColumn("table", normalizeName($"fileName")) // T1
-      .withColumn("url", concat(lit(repositoryUrl), $"href")) // T4
-      // T3: "2023-05-16 09:18" → 20230516. try_cast: nav/header rows have
-      // no date (the reference skips them positionally); they can't
-      // survive the whitelist join anyway.
-      .withColumn("file_date",
-        expr("try_cast(regexp_replace(substring(lastModified, 1, 10), '-', '') AS int)"))
-      .filter($"file_date".isNotNull)
-
-    val perTable = files
-      .join(requested, $"table" === requested("name"), "inner") // P3 (inner keeps name+exists)
-      .groupBy($"name", $"exists")
-      .agg(
-        max($"file_date").as("ref_date"), // A1 grouped max
-        collect_list(struct($"url", $"file_date")).as("raw_files")) // A2
-      .filter(size($"raw_files") > 0) // P5 (inner join already enforces)
-
-    perTable.select(
-      $"name", $"exists", $"ref_date",
-      // quirk #3: every file carries the table-level max ref_date
-      transform($"raw_files",
-        f => struct(
-          f.getField("url").as("url"),
-          $"name".as("table_name"),
-          lit(bucketName).as("bucket_name"),
-          $"ref_date".as("date"))).as("files"))
-      .as[TableManifest]
+    manifests(listing, requestedTables, tablesInCatalog, bucketName, repositoryUrl).toDS()
   }
 }

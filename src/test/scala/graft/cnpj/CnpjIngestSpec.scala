@@ -24,8 +24,8 @@ class CnpjIngestSpec extends AnyFunSuite {
   val lakeRoot = new File(work, "lake").getAbsolutePath
   val staging = new File(work, "staging").getAbsolutePath
 
-  def writeZip(name: String, members: Seq[(String, String)]): File = {
-    val f = new File(repoDir, name)
+  def writeZip(name: String, members: Seq[(String, String)], dir: File = repoDir): File = {
+    val f = new File(dir, name)
     val zos = new ZipOutputStream(new FileOutputStream(f))
     members.foreach { case (entryName, content) =>
       zos.putNextEntry(new ZipEntry(entryName))
@@ -183,5 +183,184 @@ class CnpjIngestSpec extends AnyFunSuite {
       Seq("municipios"), tablesInCatalog = Set(),
       repoUrl, lakeRoot, staging, "bkt", db = "cnpj_ing")
     assert(spark.table("cnpj_ing.municipios").count() == 3) // dynamic overwrite, not append
+  }
+
+  /** Regular files under `dir` whose names end in .zip or .csv. */
+  def scratchLeft(dir: String): Seq[String] = {
+    val root = new File(dir).toPath
+    if (!Files.exists(root)) Seq.empty
+    else {
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.map(_.toString)
+        .filter(p => p.endsWith(".zip") || p.endsWith(".csv")).toList
+      finally walk.close()
+    }
+  }
+
+  // a second site for the failure paths, so the main site's files stay as
+  // the tests above expect (Cnaes.zip must stay missing there)
+  val badRepo = new File(work, "repo-bad"); badRepo.mkdirs()
+  writeZip("Municipios.zip", Seq("MUNICCSV" -> "1;SÃO PAULO\n2;BRASÍLIA\n3;NITERÓI\n"), badRepo)
+  Files.write(new File(badRepo, "Paises.zip").toPath, "this is not a zip".getBytes("US-ASCII"))
+  // end-of-central-directory record alone: a valid zip with no members
+  Files.write(new File(badRepo, "Motivos.zip").toPath, Array[Byte](0x50, 0x4b, 5, 6) ++ new Array[Byte](18))
+  writeZip("Naturezas.zip", Seq("NATJUCSV" -> "2062;SOCIEDADE LIMITADA\nx1;CODIGO NAO NUMERICO\n"), badRepo)
+
+  def badSite(files: String*): Seq[ListingEntry] = ListingScraper.parse(
+    "<table>" + files.map(autoindexRow("/icons/compressed.gif", _, "2023-05-16 09:18")).mkString +
+      "</table>")
+
+  test("K4: a corrupt zip and an empty zip fail only their own tables and leave no scratch") {
+    val stagingBad = s"$staging-bad"
+    val results = IngestJob.runWithListing(spark,
+      badSite("Municipios.zip", "Paises.zip", "Motivos.zip"),
+      Seq("municipios", "paises", "motivos"), tablesInCatalog = Set(),
+      badRepo.toURI.toString, s"$lakeRoot-bad", stagingBad, "bkt", db = "cnpj_bad")
+    val byName = results.map(r => r.table -> r).toMap
+    assert(byName.keySet == Set("municipios", "paises", "motivos"))
+    for (bad <- Seq("paises", "motivos"))
+      assert(byName(bad).error.isDefined && !byName(bad).updated, byName(bad))
+    assert(scratchLeft(stagingBad).isEmpty, s"scratch left in staging: ${scratchLeft(stagingBad)}")
+    assert(byName("motivos").error.exists(_.contains("Motivos.zip has no members")), byName("motivos"))
+    assert(byName("municipios") == IngestJob.TableResult("municipios", updated = true, 3L, None))
+  }
+
+  test("malformed CSV row: FAILFAST fails that table, by name; the other ingests; no CSV stays") {
+    val stagingBad = s"$staging-malformed"
+    val results = IngestJob.runWithListing(spark, badSite("Municipios.zip", "Naturezas.zip"),
+      Seq("municipios", "naturezas"), tablesInCatalog = Set(),
+      badRepo.toURI.toString, s"$lakeRoot-malformed", stagingBad, "bkt", db = "cnpj_malformed")
+    val byName = results.map(r => r.table -> r).toMap
+    val err = byName("naturezas").error
+    assert(!byName("naturezas").updated && err.isDefined)
+    // FAILFAST stops the read at the bad row; the error names the staged
+    // file, which is the table's
+    assert(err.exists(e => e.contains("FAILED_READ_FILE") && e.contains("naturezas/Naturezas.csv")),
+      s"the error must name the table's file: $err")
+    assert(byName("municipios") == IngestJob.TableResult("municipios", updated = true, 3L, None))
+    assert(scratchLeft(stagingBad).isEmpty, s"scratch left in staging: ${scratchLeft(stagingBad)}")
+  }
+
+  test("repeated requested names: one manifest entry, distinct files, one ingest") {
+    val m = ManifestBuilder.build(spark, ListingScraper.parse(html),
+      Seq("municipios", "municipios", "empresas"), tablesInCatalog = Set(), "bkt", repoUrl)
+      .collect().toSeq
+    assert(m.map(_.name) == Seq("municipios", "empresas"))
+    assert(m.head.files.map(_.url) == Seq(s"${repoUrl}Municipios.zip"))
+    assert(m.forall(t => t.files.distinct == t.files))
+
+    val results = IngestJob.runWithListing(spark, ListingScraper.parse(html),
+      Seq("municipios", "municipios"), tablesInCatalog = Set(),
+      repoUrl, s"$lakeRoot-dup", s"$staging-dup", "bkt", db = "cnpj_dup")
+    assert(results == Seq(IngestJob.TableResult("municipios", updated = true, 3L, None)))
+  }
+
+  test("T1/T3 on the driver agree with the Catalyst expressions they replaced, on edge inputs") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val names = Seq("Empresas0.zip", "Empresas0.tar.zip", "Municípios.zip", "SOCIOS9.ZIP",
+      "/", "regime_tributario/", "", ".zip")
+    val dates = Seq("2023-05-16 09:18", "2023-05-1", " 2023-05-16", "2023.05.16 09", "", "-",
+      "+20230516", "2023-05-16.0", "20230516.5", "12.", "1.5", ".5", "\t20230516",
+      "99999999999", "1e3", "+", "2023 05 16", "\u0662\u0660\u0662\u0663")
+    // the oracle: the Spark SQL that computed T1 and T3 before the
+    // manifest became driver code
+    val oracleNames = names.toDF("n")
+      .select(regexp_replace(lower(split_part($"n", lit("."), lit(1))), "[^a-z]", ""))
+      .as[String].collect().toSeq
+    val oracleDates = dates.toDF("d")
+      .select(expr("try_cast(regexp_replace(substring(d, 1, 10), '-', '') AS int)"))
+      .as[Option[Int]].collect().toSeq
+    assert(names.map(ManifestBuilder.normalizeName) == oracleNames)
+    assert(dates.map(ManifestBuilder.fileDate) == oracleDates,
+      dates.zip(dates.map(ManifestBuilder.fileDate)).zip(oracleDates).mkString("\n"))
+    assert(Seq("2023-05-1", " 2023-05-16", "2023.05.16 09").map(ManifestBuilder.fileDate) ==
+      Seq(Some(2023051), Some(2023051), None))
+  }
+
+  /** The jobs `body` submits, as (call site, stage ids), and the task
+    * count and shuffle-write bytes of each of their stages. A job that
+    * adaptive execution submits from its own thread gets the call site of
+    * its SQL execution. The listener bus delivers events in order, so a
+    * marker job before and after `body` fences off earlier work and waits
+    * for `body`'s last events.
+    */
+  private def recordJobs[T](body: => T): (T, Seq[(String, Set[Int])], Map[Int, (Int, Long)]) = {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, LinkedBlockingQueue, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val marker = "recordJobs marker"
+    val executionSites = new ConcurrentHashMap[Long, String]()
+    val jobs = new ConcurrentLinkedQueue[(Int, String, Set[Int])]()
+    val tasks = new ConcurrentLinkedQueue[(Int, Long)]()
+    val markerJobs = ConcurrentHashMap.newKeySet[Int]()
+    val markersDone = new LinkedBlockingQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == marker))
+          markerJobs.add(j.jobId)
+        else {
+          val site = Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .flatMap(id => Option(executionSites.get(id.toLong)))
+            .getOrElse(j.stageInfos.headOption.map(_.details).getOrElse(""))
+          jobs.add((j.jobId, site, j.stageIds.toSet))
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => executionSites.put(s.executionId, s.details)
+        case _ =>
+      }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(j.jobId)) markersDone.add(j.jobId)
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        tasks.add((t.stageId,
+          Option(t.taskMetrics).map(_.shuffleWriteMetrics.bytesWritten).getOrElse(0L)))
+    }
+    def fence(): Unit = {
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(0), 1).count() finally sc.setJobDescription(null)
+      assert(markersDone.poll(60, TimeUnit.SECONDS) != null, "listener bus did not drain")
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence(); jobs.clear(); tasks.clear()
+      val result = body
+      fence()
+      val byStage = tasks.asScala.toSeq.groupBy(_._1)
+        .map { case (sid, ts) => sid -> (ts.size, ts.map(_._2).sum) }
+      (result, jobs.asScala.toSeq.sortBy(_._1).map(j => (j._2, j._3)), byStage)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("counters: the manifest submits no job; each stale table's fetch is one job, one task per file") {
+    val listing = ListingScraper.parse(html)
+    val tables = Seq("municipios", "empresas")
+    val (manifest, manifestJobs, _) = recordJobs {
+      ManifestBuilder.manifests(listing, tables, Set(), "bkt", repoUrl)
+    }
+    assert(manifestJobs.isEmpty, s"the manifest build ran Spark jobs: $manifestJobs")
+    val filesPerTable = manifest.map(_.files.size).sorted
+    assert(filesPerTable == Seq(1, 2))
+
+    val (results, jobs, stages) = recordJobs {
+      IngestJob.runWithListing(spark, listing, tables, tablesInCatalog = Set(),
+        repoUrl, s"$lakeRoot-jobs", s"$staging-jobs", "bkt", db = "cnpj_jobs")
+    }
+    assert(results.forall(r => r.updated && r.error.isEmpty), results)
+    // a job's layer is its first graft frame, as perfbench attributes it:
+    // the fetch is fetchAndStage itself, or processTable collecting it
+    def isFetch(callSite: String): Boolean = {
+      val frames = callSite.split('\n').map(_.trim)
+      val first = frames.indexWhere(_.startsWith("graft."))
+      first >= 0 && (frames(first).contains("fetchAndStage") ||
+        frames(first).contains("processTable") && frames.take(first).exists(_.contains("Dataset.collect")))
+    }
+    val fetch = jobs.filter(j => isFetch(j._1))
+    assert(fetch.size == tables.size, s"fetch jobs: ${fetch.mkString("\n")}")
+    assert(fetch.forall(_._2.size == 1), s"a fetch job ran more than one stage: $fetch")
+    assert(fetch.map(_._2.toSeq.map(s => stages(s)._1).sum).sorted == filesPerTable)
+    assert(fetch.flatMap(_._2).map(s => stages(s)._2).sum == 0L, "the fetch wrote shuffle bytes")
   }
 }

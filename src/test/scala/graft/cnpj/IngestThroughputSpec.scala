@@ -36,9 +36,9 @@ class IngestThroughputSpec extends AnyFunSuite {
     val csvBytes = csv.getBytes(Charset.forName("ISO-8859-1")).length
 
     import spark.implicits._
-    val tasks = Seq(FileTask(zipFile.toURI.toString, "empresas", "bkt", 20230701)).toDS()
+    val tasks = Seq(FileTask(zipFile.toURI.toString, "empresas", "bkt", 20230701))
     val t0 = System.nanoTime()
-    val staged = Ingest.fetchAndStage(tasks, new File(work, "staging").getAbsolutePath).collect()
+    val staged = Ingest.fetchAndStage(spark, tasks, new File(work, "staging").getAbsolutePath).collect()
     val df = Ingest.readCsv(spark, "empresas", staged.map(_._2).toSeq)
     Ingest.writeSnapshot(df, work.getAbsolutePath, "empresas", 20230701)
     val secs = (System.nanoTime() - t0) / 1e9
