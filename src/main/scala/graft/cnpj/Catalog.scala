@@ -1,20 +1,25 @@
 package graft.cnpj
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** Catalog operations (SURVEY S3/S4/K5): the Spark session catalog plays
   * the reference's Glue Data Catalog role — external parquet tables over
   * the lake, partitions discovered with recoverPartitions (the crawler's
   * job, minus re-inference: schemas are declared).
+  *
+  * The two reads (S3, S4) are one metadata call each on the session
+  * catalog, like the reference's single Glue API calls: they submit no
+  * Spark job and resolve no per-table schema.
   */
 object CatalogOps {
 
-  /** S3: table names currently in the catalog database (reference
-    * GetTables, `state_machine.asl:5-13`).
+  /** S3: table names currently in the catalog database, temp views
+    * included (reference GetTables, `state_machine.asl:5-13`).
     */
   def listTables(spark: SparkSession, db: String = "default"): Set[String] = {
     if (!spark.catalog.databaseExists(db)) return Set.empty
-    spark.catalog.listTables(db).collect().map(_.name).toSet
+    spark.sessionState.catalog.listTables(db).map(_.table).toSet
   }
 
   /** K5: register <lakeRoot>/cnpj_db/<table> as an external partitioned
@@ -47,8 +52,8 @@ object CatalogOps {
     * `state_machine.asl:43-55`). Values of the single ref_date key.
     */
   def listPartitions(spark: SparkSession, table: String, db: String = "default"): Seq[String] =
-    spark.sql(s"SHOW PARTITIONS `$db`.`$table`").collect()
-      .map(_.getString(0).stripPrefix("ref_date=")).toSeq
+    spark.sessionState.catalog.listPartitions(TableIdentifier(table, Some(db)))
+      .map(_.spec("ref_date"))
 }
 
 /** Incremental-update gate (SURVEY F1-F3).

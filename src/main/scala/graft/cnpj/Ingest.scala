@@ -4,9 +4,11 @@ import java.io.{File, FileOutputStream}
 import java.net.URI
 import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipException, ZipFile}
+import org.apache.commons.lang3.exception.ExceptionUtils
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructType}
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** Data-plane ingestion: fetch → unzip → decode CSV → partitioned lake
@@ -18,23 +20,26 @@ import scala.util.control.NonFatal
   * (shared storage on a real cluster), after which the CSV
   * reader splits large files across tasks and streams row groups out —
   * the reference's whole-table-in-RAM blowup (README.md:259-265) does
-  * not exist here. Task retries come from Spark (F4 analog); driver-side
-  * HTTP goes through Retry.withBackoff.
+  * not exist here. Downloads, in the tasks and on the driver, go through
+  * Retry.withBackoff (F4 analog).
   */
 object Ingest {
 
   /** S5+S6: download each task's zip and extract the FIRST member only
     * (reference quirk #1, `fetch_data.py:65`: `namelist()[0]`). Returns
-    * (task, stagedCsvPath), lazily: collecting it runs one job of
-    * N tasks for N files, with no shuffle.
+    * each task's outcome, lazily: collecting it runs one job of N tasks
+    * for N files, with no shuffle. A file that fails comes back as an
+    * outcome with its error, not as a failed task, so the job always runs
+    * every file to the end and reports every CSV its siblings staged.
     */
   def fetchAndStage(spark: SparkSession, files: Seq[FileTask],
-                    stagingDir: String): Dataset[(FileTask, String)] = {
+                    stagingDir: String): Dataset[StagedFile] = {
     import spark.implicits._
     spark.sparkContext.parallelize(files, files.size.max(1)).map { task =>
       val zipName = task.url.substring(task.url.lastIndexOf('/') + 1)
       val stem = zipName.split("\\.")(0)
       val local = new File(stagingDir, zipName)
+      val out = new File(stagingDir, s"$stem.csv")
       local.getParentFile.mkdirs()
       try {
         Retry.withBackoff(attempts = 3, firstDelayMs = 100) {
@@ -48,14 +53,28 @@ object Ingest {
           val members = zf.entries()
           if (!members.hasMoreElements) throw new ZipException(s"$zipName has no members")
           val first = members.nextElement() // first member ONLY
-          val out = new File(stagingDir, s"$stem.csv")
           val os = new FileOutputStream(out)
           try zf.getInputStream(first).transferTo(os) finally os.close()
-          (task, out.getAbsolutePath)
+          StagedFile(Some(out.getAbsolutePath), None)
         } finally zf.close()
+      } catch {
+        case NonFatal(e) =>
+          out.delete() // a member that failed mid-extract
+          StagedFile(None, Some(s"$zipName: ${describe(e)}"))
       } finally local.delete() // K4: a failed download or a bad zip leaves no scratch either
     }.toDS()
   }
+
+  /** A failure's message, then each cause's message that adds to it:
+    * Spark reports a task's error (a FAILFAST parse error, say) wrapped
+    * in a generic one whose message drops it.
+    */
+  private[cnpj] def describe(e: Throwable): String =
+    ExceptionUtils.getThrowableList(e).asScala
+      .map(t => Option(t.getMessage).getOrElse(t.getClass.getName))
+      .foldLeft("") { (acc, m) =>
+        if (acc.isEmpty) m else if (acc.contains(m)) acc else s"$acc; caused by: $m"
+      }
 
   /** S7+T2+T5: headerless `;`-separated latin-1 CSV with the declared
     * schema. Double columns arrive with decimal COMMAS (reference

@@ -3,7 +3,8 @@ package graft.cnpj
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** End-to-end ingestion driver (SURVEY §3.1): the Spark-native equivalent
   * of the reference's whole state machine.
@@ -26,6 +27,10 @@ import org.apache.spark.sql.SparkSession
   */
 object IngestJob {
 
+  /** One table's outcome. `rows` is the row count of the snapshot this run
+    * wrote (0 when the gate skipped the table or it failed); `error` is
+    * the failure's message followed by each cause's that adds to it.
+    */
   case class TableResult(table: String, updated: Boolean, rows: Long, error: Option[String])
 
   /** Test hook: thread that processed each table in the last run. */
@@ -82,7 +87,14 @@ object IngestJob {
   }
 
   /** One table end-to-end: gate → fetch → decode → write → catalog.
-    * Never throws — failures come back as TableResult.error (M1).
+    * Never throws — failures come back as TableResult.error (M1), with
+    * the message of each cause that adds to it.
+    *
+    * `rows` is the decoded frame's row count, observed by the write job
+    * itself; no job reads the table back. In its place, a table that
+    * wrote rows must find its ref_date among the catalog's partitions
+    * after the sync. A zero-row snapshot writes no partition and comes
+    * back updated with 0 rows.
     */
   private def processTable(
       spark: SparkSession,
@@ -90,7 +102,6 @@ object IngestJob {
       lakeRoot: String,
       stagingDir: String,
       db: String): TableResult = {
-    import spark.implicits._
     processingThreads.put(tm.name, Thread.currentThread().getName)
     try {
       // F1/F2/F3: skip fresh tables (no-op branch, reference asl:90-92)
@@ -100,23 +111,28 @@ object IngestJob {
       else {
         val staged = Ingest.fetchAndStage(
           spark, tm.files, s"$stagingDir/${tm.name}").collect() // M2
+        val csvs = staged.flatMap(_.csvPath).toSeq
         try {
-          val df = Ingest.readCsv(spark, tm.name, staged.map(_._2).toSeq)
+          staged.flatMap(_.error).headOption.foreach(sys.error)
+          val rowCount = Observation(s"${tm.name} rows")
+          val df = Ingest.readCsv(spark, tm.name, csvs).observe(rowCount, count(lit(1)).as("rows"))
           Ingest.writeSnapshot(df, lakeRoot, tm.name, tm.ref_date)
+          val rows = rowCount.get("rows").asInstanceOf[Long]
           CatalogOps.ensureTable(spark, tm.name, lakeRoot, db) // K5
-          val rows = spark.table(s"`$db`.`${tm.name}`")
-            .where($"ref_date" === tm.ref_date.toString).count()
+          if (rows > 0 && !CatalogOps.listPartitions(spark, tm.name, db).contains(tm.ref_date.toString))
+            throw new IllegalStateException(
+              s"wrote $rows rows but the catalog has no partition ref_date=${tm.ref_date} for `$db`.`${tm.name}`")
           TableResult(tm.name, updated = true, rows, None)
         } finally {
-          // K4: scratch cleanup must also run on failed decodes, or
-          // multi-GB extracted CSVs pile up across retried runs
-          staged.foreach(s => new java.io.File(s._2).delete())
+          // K4: scratch cleanup must also run on failed fetches and
+          // decodes, or multi-GB extracted CSVs pile up across retried runs
+          csvs.foreach(p => new java.io.File(p).delete())
         }
       }
     } catch {
       // M1: per-table failure isolation
       // Throwable, not NonFatal: a fatal error never completes its Future and Await.result(_, Inf) hangs
-      case e: Throwable => TableResult(tm.name, updated = false, 0L, Some(e.getMessage))
+      case e: Throwable => TableResult(tm.name, updated = false, 0L, Some(Ingest.describe(e)))
     }
   }
 }

@@ -27,6 +27,13 @@ case class FileTask(
     bucket_name: String,
     date: Int)
 
+/** One fetch task's outcome (M2): the staged CSV's path, or the error
+  * that failed its file, naming the zip. A task reports its failure
+  * instead of throwing, so the table's job always runs every file to the
+  * end and every staged CSV is known to the driver (K4).
+  */
+case class StagedFile(csvPath: Option[String], error: Option[String])
+
 /** Per-table manifest entry (reference `check_update.py:24-38,72-92`). */
 case class TableManifest(
     name: String,

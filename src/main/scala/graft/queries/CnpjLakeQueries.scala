@@ -195,10 +195,11 @@ object CnpjLakeQueries {
       (s, _) => {
         // The reference's incremental-update decision (F1-F3, README.md:222)
         // as an ORACLE row, not just a spec: the REAL control-plane path —
-        // catalog registration, SHOW PARTITIONS, FreshnessGate.shouldUpdate
-        // — runs per table against fixed manifest dates chosen to land on
-        // both sides of the max partition, and DuckDB independently derives
-        // the same decision from the same hive dirs. Partition listing is a
+        // catalog registration, the catalog's partition listing,
+        // FreshnessGate.shouldUpdate — runs per table against fixed
+        // manifest dates chosen to land on both sides of the max
+        // partition, and DuckDB independently derives the same decision
+        // from the same hive dirs. Partition listing is a
         // metadata operation: no data file is read at any scale.
         val root = ensureLake(s)
         import s.implicits._

@@ -206,6 +206,10 @@ class CnpjIngestSpec extends AnyFunSuite {
   // end-of-central-directory record alone: a valid zip with no members
   Files.write(new File(badRepo, "Motivos.zip").toPath, Array[Byte](0x50, 0x4b, 5, 6) ++ new Array[Byte](18))
   writeZip("Naturezas.zip", Seq("NATJUCSV" -> "2062;SOCIEDADE LIMITADA\nx1;CODIGO NAO NUMERICO\n"), badRepo)
+  // one table of two files: the first good, the second not a zip
+  writeZip("Empresas0.zip", Seq("EMPRECSV" -> "11111111;EMPRESA A LTDA;2062;49;1000,50;1;\n"), badRepo)
+  Files.write(new File(badRepo, "Empresas1.zip").toPath, "not a zip either".getBytes("US-ASCII"))
+  writeZip("Qualificacoes.zip", Seq("QUALSCSV" -> ""), badRepo)
 
   def badSite(files: String*): Seq[ListingEntry] = ListingScraper.parse(
     "<table>" + files.map(autoindexRow("/icons/compressed.gif", _, "2023-05-16 09:18")).mkString +
@@ -279,6 +283,105 @@ class CnpjIngestSpec extends AnyFunSuite {
       Seq(Some(2023051), Some(2023051), None))
   }
 
+  private def recordJobs[T](body: => T): (T, Seq[(String, Set[Int])], Map[Int, (Int, Long)]) =
+    CnpjIngestSpec.recordJobs(spark)(body)
+
+  test("counters: the manifest submits no job; each stale table's fetch is one job, one task per file") {
+    val listing = ListingScraper.parse(html)
+    val tables = Seq("municipios", "empresas")
+    val (manifest, manifestJobs, _) = recordJobs {
+      ManifestBuilder.manifests(listing, tables, Set(), "bkt", repoUrl)
+    }
+    assert(manifestJobs.isEmpty, s"the manifest build ran Spark jobs: $manifestJobs")
+    val filesPerTable = manifest.map(_.files.size).sorted
+    assert(filesPerTable == Seq(1, 2))
+
+    val (results, jobs, stages) = recordJobs {
+      IngestJob.runWithListing(spark, listing, tables, tablesInCatalog = Set(),
+        repoUrl, s"$lakeRoot-jobs", s"$staging-jobs", "bkt", db = "cnpj_jobs")
+    }
+    assert(results.forall(r => r.updated && r.error.isEmpty), results)
+    // a job's layer is its first graft frame, as perfbench attributes it:
+    // the fetch is fetchAndStage itself, or processTable collecting it
+    def isFetch(callSite: String): Boolean = {
+      val frames = callSite.split('\n').map(_.trim)
+      val first = frames.indexWhere(_.startsWith("graft."))
+      first >= 0 && (frames(first).contains("fetchAndStage") ||
+        frames(first).contains("processTable") && frames.take(first).exists(_.contains("Dataset.collect")))
+    }
+    val fetch = jobs.filter(j => isFetch(j._1))
+    assert(fetch.size == tables.size, s"fetch jobs: ${fetch.mkString("\n")}")
+    assert(fetch.forall(_._2.size == 1), s"a fetch job ran more than one stage: $fetch")
+    assert(fetch.map(_._2.toSeq.map(s => stages(s)._1).sum).sorted == filesPerTable)
+    assert(fetch.flatMap(_._2).map(s => stages(s)._2).sum == 0L, "the fetch wrote shuffle bytes")
+  }
+
+  test("one bad zip of a multi-file table: the table fails naming that zip; no sibling CSV stays") {
+    val stagingBad = s"$staging-siblings"
+    val results = IngestJob.runWithListing(spark, badSite("Empresas0.zip", "Empresas1.zip"),
+      Seq("empresas"), tablesInCatalog = Set(),
+      badRepo.toURI.toString, s"$lakeRoot-siblings", stagingBad, "bkt", db = "cnpj_siblings")
+    assert(scratchLeft(stagingBad).isEmpty, s"scratch left in staging: ${scratchLeft(stagingBad)}")
+    val Seq(r) = results
+    assert(!r.updated && r.error.exists(_.startsWith("Empresas1.zip: ")), r)
+  }
+
+  test("malformed CSV row: the table's error also carries the parse error of its cause") {
+    val Seq(r) = IngestJob.runWithListing(spark, badSite("Naturezas.zip"),
+      Seq("naturezas"), tablesInCatalog = Set(),
+      badRepo.toURI.toString, s"$lakeRoot-cause", s"$staging-cause", "bkt", db = "cnpj_cause")
+    assert(r.error.exists(e => e.contains("FAILED_READ_FILE") && e.contains("MALFORMED_RECORD_IN_PARSING")),
+      s"the error must name the parse error: ${r.error}")
+  }
+
+  test("a zero-row CSV ingests as updated with 0 rows and registers no partition") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val run = Future(IngestJob.runWithListing(spark, badSite("Qualificacoes.zip"),
+      Seq("qualificacoes"), tablesInCatalog = Set(),
+      badRepo.toURI.toString, s"$lakeRoot-empty", s"$staging-empty", "bkt", db = "cnpj_empty"))
+    // the row count is observed by the write job: waiting on it must end
+    // even when the write saw no row
+    assert(Await.result(run, 120.seconds) ==
+      Seq(IngestJob.TableResult("qualificacoes", updated = true, 0L, None)))
+    assert(CatalogOps.listPartitions(spark, "qualificacoes", "cnpj_empty").isEmpty)
+  }
+
+  test("counters: catalog reads submit no job; a refresh of one stale table is fetch + write") {
+    val db = "cnpj_refresh"
+    val (lake, stage) = (s"$lakeRoot-refresh", s"$staging-refresh")
+    val tables = Seq("municipios", "empresas")
+    val first = IngestJob.runWithListing(spark, ListingScraper.parse(html), tables,
+      tablesInCatalog = Set(), repoUrl, lake, stage, "bkt", db = db)
+    assert(first.forall(r => r.updated && r.error.isEmpty), first)
+
+    val (read, readJobs, _) = recordJobs {
+      (CatalogOps.listTables(spark, db), CatalogOps.listPartitions(spark, "empresas", db))
+    }
+    // the same names the public catalog API lists, temp views included
+    assert(read == (spark.catalog.listTables(db).collect().map(_.name).toSet, Seq("20230516")))
+    assert(Set("municipios", "empresas").subsetOf(read._1))
+    assert(readJobs.isEmpty, s"catalog reads ran Spark jobs: ${readJobs.mkString("\n")}")
+
+    // a newer Municipios.zip on the site: municipios is stale, empresas fresh
+    val newer = ListingScraper.parse(html).map(e =>
+      if (e.fileName == "Municipios.zip") e.copy(lastModified = "2023-06-16 09:18") else e)
+    val (results, jobs, _) = recordJobs {
+      IngestJob.runWithListing(spark, newer, tables, CatalogOps.listTables(spark, db),
+        repoUrl, lake, stage, "bkt", db = db)
+    }
+    assert(results == Seq(IngestJob.TableResult("municipios", updated = true, 3L, None),
+      IngestJob.TableResult("empresas", updated = false, 0L, None)))
+    assert(CatalogOps.listPartitions(spark, "municipios", db).sorted == Seq("20230516", "20230616"))
+    // a job's submitter is its first graft frame, as perfbench attributes it
+    val sites = jobs.map(_._1.split('\n').map(_.trim).find(_.startsWith("graft.")).getOrElse(""))
+    assert(sites.size == 2 && sites.head.contains("processTable") && sites(1).contains("writeSnapshot"),
+      s"a refresh must run the fetch and the write only: ${jobs.map(_._1).mkString("\n---\n")}")
+  }
+}
+
+object CnpjIngestSpec {
   /** The jobs `body` submits, as (call site, stage ids), and the task
     * count and shuffle-write bytes of each of their stages. A job that
     * adaptive execution submits from its own thread gets the call site of
@@ -286,7 +389,7 @@ class CnpjIngestSpec extends AnyFunSuite {
     * marker job before and after `body` fences off earlier work and waits
     * for `body`'s last events.
     */
-  private def recordJobs[T](body: => T): (T, Seq[(String, Set[Int])], Map[Int, (Int, Long)]) = {
+  def recordJobs[T](spark: SparkSession)(body: => T): (T, Seq[(String, Set[Int])], Map[Int, (Int, Long)]) = {
     import org.apache.spark.scheduler._
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, LinkedBlockingQueue, TimeUnit}
@@ -297,7 +400,7 @@ class CnpjIngestSpec extends AnyFunSuite {
     val jobs = new ConcurrentLinkedQueue[(Int, String, Set[Int])]()
     val tasks = new ConcurrentLinkedQueue[(Int, Long)]()
     val markerJobs = ConcurrentHashMap.newKeySet[Int]()
-    val markersDone = new LinkedBlockingQueue[Int]()
+    val markersDone = new LinkedBlockingQueue[Integer]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         if (Option(j.properties).exists(_.getProperty("spark.job.description") == marker))
@@ -332,35 +435,5 @@ class CnpjIngestSpec extends AnyFunSuite {
         .map { case (sid, ts) => sid -> (ts.size, ts.map(_._2).sum) }
       (result, jobs.asScala.toSeq.sortBy(_._1).map(j => (j._2, j._3)), byStage)
     } finally sc.removeSparkListener(listener)
-  }
-
-  test("counters: the manifest submits no job; each stale table's fetch is one job, one task per file") {
-    val listing = ListingScraper.parse(html)
-    val tables = Seq("municipios", "empresas")
-    val (manifest, manifestJobs, _) = recordJobs {
-      ManifestBuilder.manifests(listing, tables, Set(), "bkt", repoUrl)
-    }
-    assert(manifestJobs.isEmpty, s"the manifest build ran Spark jobs: $manifestJobs")
-    val filesPerTable = manifest.map(_.files.size).sorted
-    assert(filesPerTable == Seq(1, 2))
-
-    val (results, jobs, stages) = recordJobs {
-      IngestJob.runWithListing(spark, listing, tables, tablesInCatalog = Set(),
-        repoUrl, s"$lakeRoot-jobs", s"$staging-jobs", "bkt", db = "cnpj_jobs")
-    }
-    assert(results.forall(r => r.updated && r.error.isEmpty), results)
-    // a job's layer is its first graft frame, as perfbench attributes it:
-    // the fetch is fetchAndStage itself, or processTable collecting it
-    def isFetch(callSite: String): Boolean = {
-      val frames = callSite.split('\n').map(_.trim)
-      val first = frames.indexWhere(_.startsWith("graft."))
-      first >= 0 && (frames(first).contains("fetchAndStage") ||
-        frames(first).contains("processTable") && frames.take(first).exists(_.contains("Dataset.collect")))
-    }
-    val fetch = jobs.filter(j => isFetch(j._1))
-    assert(fetch.size == tables.size, s"fetch jobs: ${fetch.mkString("\n")}")
-    assert(fetch.forall(_._2.size == 1), s"a fetch job ran more than one stage: $fetch")
-    assert(fetch.map(_._2.toSeq.map(s => stages(s)._1).sum).sorted == filesPerTable)
-    assert(fetch.flatMap(_._2).map(s => stages(s)._2).sum == 0L, "the fetch wrote shuffle bytes")
   }
 }

@@ -67,6 +67,39 @@ class CnpjQueriesSpec extends AnyFunSuite {
     assert(byNature == Seq(("Sociedade Limitada", 2L, 3000.50), ("Empresa Publica", 1L, 500.00)))
   }
 
+  test("counters: the legal-nature read is 3 jobs, sorted in one task without range partitioning") {
+    val df = CnpjQueries.companiesByLegalNature(spark, db = "cnpj_q")
+    val (rows, jobs, _) = CnpjIngestSpec.recordJobs(spark)(df.collect().toSeq)
+    assert(rows.map(_.getString(0)) == Seq("Sociedade Limitada", "Empresa Publica"))
+    assert(jobs.size == 3, s"jobs: ${jobs.map(_._1).mkString("\n---\n")}")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.toLowerCase.contains("rangepartitioning"), plan)
+  }
+
+  test("the reads count the newest snapshot only, however many the lake holds") {
+    import spark.implicits._
+    val tables = Seq("municipios", "naturezas", "empresas", "estabelecimentos")
+    val (lake, db) = (s"$lakeRoot-snapshots", "cnpj_snapshots")
+    def answers() = (
+      CnpjQueries.establishmentsPerMunicipality(spark, db = db).as[(String, Long)].collect().toSeq,
+      CnpjQueries.companiesByLegalNature(spark, db = db)
+        .select($"desc", $"n_companies", $"total_capital").as[(String, Long, Double)].collect().toSeq)
+    val first = IngestJob.runWithListing(spark, ListingScraper.parse(html), tables,
+      tablesInCatalog = Set(), repoDir.toURI.toString, lake, staging, "bkt", db = db)
+    assert(first.forall(r => r.updated && r.error.isEmpty), first)
+    val once = answers()
+    assert(once == (Seq(("CAMPINAS", 3L), ("SANTOS", 1L)),
+      Seq(("Sociedade Limitada", 2L, 3000.50), ("Empresa Publica", 1L, 500.00))))
+
+    // next month's publication: the same rows, a newer date on every file
+    val republished = ListingScraper.parse(html.replace("2023-06-01 08:00", "2023-07-01 08:00"))
+    val second = IngestJob.runWithListing(spark, republished, tables,
+      CatalogOps.listTables(spark, db), repoDir.toURI.toString, lake, staging, "bkt", db = db)
+    assert(second.forall(r => r.updated && r.error.isEmpty), second)
+    assert(tables.forall(t => CatalogOps.listPartitions(spark, t, db).sorted == Seq("20230601", "20230701")))
+    assert(answers() == once)
+  }
+
   test("ref_date predicates prune partitions down to the matching snapshot files") {
     import spark.implicits._
     // second snapshot partition written directly (newer ref_date)

@@ -39,7 +39,7 @@ class IngestThroughputSpec extends AnyFunSuite {
     val tasks = Seq(FileTask(zipFile.toURI.toString, "empresas", "bkt", 20230701))
     val t0 = System.nanoTime()
     val staged = Ingest.fetchAndStage(spark, tasks, new File(work, "staging").getAbsolutePath).collect()
-    val df = Ingest.readCsv(spark, "empresas", staged.map(_._2).toSeq)
+    val df = Ingest.readCsv(spark, "empresas", staged.flatMap(_.csvPath).toSeq)
     Ingest.writeSnapshot(df, work.getAbsolutePath, "empresas", 20230701)
     val secs = (System.nanoTime() - t0) / 1e9
 
