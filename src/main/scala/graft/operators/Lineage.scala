@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Lineage cutting for iterative DataFrame loops (BFS, connected
   * components, PageRank, SSSP, k-core, BPE learning): resets both the
@@ -28,10 +29,9 @@ import org.apache.spark.sql.DataFrame
   *     instead of failing a 100-round job. The documented price is the
   *     standard one: the checkpoint write recomputes the (small,
   *     per-round label/frontier) frame once more per round. The files
-  *     are deleted only by the ContextCleaner, and only when the session
-  *     also sets `spark.cleaner.referenceTracking.cleanCheckpoints=true`;
-  *     without it a long session accumulates round state in the
-  *     checkpoint directory.
+  *     go when the cut is released ([[release]]; [[iterate]] releases
+  *     each superseded round), or by the ContextCleaner when the session
+  *     also sets `spark.cleaner.referenceTracking.cleanCheckpoints=true`.
   *
   * Only half lazy under AQE (on in every graft session): `cut` builds
   * the frame's RDD, and adaptive execution runs every shuffle map stage
@@ -53,18 +53,21 @@ object Lineage {
 
   val ReliableConf = "spark.graft.checkpoint.reliable"
 
-  def cut(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
+  /** Whether the session's cuts write reliable checkpoint files. */
+  def reliable(spark: SparkSession): Boolean =
     // unparsable values fail LOUDLY: silently falling back to the
     // non-durable mode would hand the operator exactly the
     // executor-loss failure the flag was set to survive
-    val reliable = spark.conf.get(ReliableConf, "false").trim.toLowerCase match {
+    spark.conf.get(ReliableConf, "false").trim.toLowerCase match {
       case "true"  => true
       case "false" => false
       case other => throw new IllegalArgumentException(
         s"$ReliableConf must be 'true' or 'false', got '$other'")
     }
-    if (reliable) {
+
+  def cut(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    if (reliable(spark)) {
       require(spark.sparkContext.getCheckpointDir.isDefined,
         s"$ReliableConf=true requires SparkContext.setCheckpointDir(...) — " +
           "reliable round state needs a durable directory")
@@ -98,18 +101,37 @@ object Lineage {
     * unpersists their RDDs (also dropping any cache-manager entry on the
     * frame itself first, so a persisted-over-cut frame releases fully).
     *
-    * After release the frame is DEAD: local-checkpoint blocks are the
-    * only copy of its data, so any later action on it (or on a plan
-    * built over it that was not itself materialized) fails with a
-    * missing-block error. Reliable-mode cuts are unaffected — their
-    * truth is the checkpoint FILES, which this does not delete.
+    * Reliable-mode leaves lose their checkpoint FILES the same way:
+    * without this, only a session that sets
+    * `spark.cleaner.referenceTracking.cleanCheckpoints` ever deletes
+    * them.
+    *
+    * After release the frame is DEAD: the blocks or files are the only
+    * copy of its data, so any later action on it (or on a plan built
+    * over it that was not itself materialized) fails with a missing
+    * block or file.
     */
   def release(df: DataFrame): Unit = {
     df.unpersist(blocking = false)
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
+    leaves(df).foreach(releaseLeaf)
+  }
+
+  /** The RDDs of the LogicalRDD leaves in `df`'s logical plan: a cut's
+    * own leaf, and those of every cut it was built over.
+    */
+  def leaves(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }
+
+  /** [[release]] for one leaf RDD: its blocks, and its files in
+    * reliable mode.
+    */
+  def releaseLeaf(rdd: RDD[_]): Unit = {
+    rdd.unpersist(blocking = false)
+    rdd.getCheckpointFile.foreach { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 

@@ -53,7 +53,8 @@ object Packing {
     * with the two-phase plan above. `orderCol` must be globally unique
     * and numeric. `uniformRange` (see [[uniformBounds]]) skips the
     * quantile sketch for hash-derived keys whose range is known a
-    * priori.
+    * priori. The result may read a [[Lineage.cut]] snapshot of `df`;
+    * [[Lineage.release]] on the result frees it.
     */
   def exclusivePrefixSum(df: DataFrame, orderCol: String, valueCol: String,
                          outCol: String, numBuckets: Int = 0,
@@ -71,8 +72,8 @@ object Packing {
     // ONCE per call; the quantile sketch (when needed), the bucket
     // totals, and the caller's final windowed job all read the same
     // executor-local blocks. Callers pass pruned frames (a few numeric
-    // columns — guide §2.3), so the blocks are narrow; the
-    // ContextCleaner releases them when the returned frame dies.
+    // columns — guide §2.3), so the blocks are narrow; releasing the
+    // returned frame frees them (the query layer holds it in QueryCaches).
     // (The previous shape persisted a pruned projection for the driver
     // actions but let the final job RECOMPUTE the chain from lineage —
     // one extra full pass of the heaviest work per call.)
@@ -154,7 +155,7 @@ object Packing {
     // [[exclusivePrefixSum]]): Lineage.cut the FULL CALLER FRAME lazily
     // — the heavy value chain computes once; the optional quantile job,
     // the grouped totals, and the final windowed job read the same
-    // blocks (ContextCleaner-released). NOTE the snapshot stores every
+    // blocks (freed by releasing the result). NOTE the snapshot stores every
     // caller column, not a pruned projection (only the totals job below
     // prunes): the weighted sampleToTokenBudget path passes its full
     // frame, so wide columns ride in the blocks — accepted, because a

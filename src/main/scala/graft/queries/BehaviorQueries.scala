@@ -381,12 +381,12 @@ object BehaviorQueries {
         // compute things you throw away") — and honors the
         // spark.graft.checkpoint.reliable opt-in. Same for `dev` below
         // (two consumers).
-        val series = Lineage.cut(
+        val series = QueryCaches.hold(Lineage.cut(
           ev.agg(min($"hr").as("h0"), max($"hr").as("h1"))
             .select(explode(sequence($"h0", $"h1")).as("hr"))
             .crossJoin(ev.select($"event_type").distinct())
             .join(agg, Seq("event_type", "hr"), "left")
-            .select($"event_type", $"hr", coalesce($"n0", lit(0L)).as("n")))
+            .select($"event_type", $"hr", coalesce($"n0", lit(0L)).as("n"))))
         def discMedian(df: org.apache.spark.sql.DataFrame, valueCol: String,
                        out: String) = df
           .withColumn("rn", row_number().over(
@@ -395,9 +395,9 @@ object BehaviorQueries {
           .groupBy($"event_type")
           .agg(max(when($"rn" === expr("(cnt + 1) div 2"), col(valueCol))).as(out))
         val med = discMedian(series, "n", "med")
-        val dev = Lineage.cut(
+        val dev = QueryCaches.hold(Lineage.cut(
           series.join(med, "event_type")
-            .withColumn("ad", abs($"n" - $"med")))
+            .withColumn("ad", abs($"n" - $"med"))))
         val mad = discMedian(dev, "ad", "mad")
         dev.join(mad, "event_type")
           .filter($"ad" > lit(3L) * $"mad")

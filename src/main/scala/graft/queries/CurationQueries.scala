@@ -393,7 +393,7 @@ object CurationQueries {
         // which would funnel the corpus through one task at 100 TB.
         val docs = Tables.documents(s, d)
           .select($"doc_id", TextFns.tokenCount($"text").as("n_tok"))
-        graft.operators.Packing.packByBudget(docs, "doc_id", "n_tok", 2000L)
+        QueryCaches.hold(graft.operators.Packing.packByBudget(docs, "doc_id", "n_tok", 2000L))
           .select($"doc_id", $"n_tok".cast("long").as("n_tok"), $"pack_id")
           .orderBy($"doc_id")
       },
@@ -685,7 +685,7 @@ object CurationQueries {
         val docs = graft.operators.Scatter.even(
             Tables.documents(s, d).select($"doc_id", $"text"), Seq($"doc_id"))
           .select($"doc_id", Bpe.tokenCount(Bpe.encode($"text")).as("n_tok"))
-        graft.operators.Packing.packByBudget(docs, "doc_id", "n_tok", 512L)
+        QueryCaches.hold(graft.operators.Packing.packByBudget(docs, "doc_id", "n_tok", 512L))
           .select($"doc_id", $"n_tok", $"pack_id")
           .orderBy($"doc_id")
       },
@@ -1801,8 +1801,8 @@ object CurationQueries {
           .select($"doc_id",
             graft.operators.Bpe.tokenCount(
               graft.operators.Bpe.encode($"text")).as("n_tok"))
-        graft.operators.Packing.exclusivePrefixSum(
-            docs, "doc_id", "n_tok", "tok_before")
+        QueryCaches.hold(graft.operators.Packing.exclusivePrefixSum(
+            docs, "doc_id", "n_tok", "tok_before"))
           .select($"doc_id", $"n_tok",
             expr("tok_before div 512").as("pack_id"),
             expr("tok_before % 512").as("start_off"),

@@ -245,7 +245,7 @@ object DedupQueries {
       // fixpoint: one join + one grouped min per round, labels
       // materialized and lineage cut per round, rounds bounded by
       // component diameter.
-      (s, d) => Dedup.labelPropComponents(sharedPairs(s, d))
+      (s, d) => QueryCaches.hold(Dedup.labelPropComponents(sharedPairs(s, d)))
         .withColumnRenamed("doc", "doc_id")
         .withColumnRenamed("component", "survivor_id")
         .orderBy(col("doc_id")),
@@ -261,7 +261,7 @@ object DedupQueries {
       // diameter (q116's propagation). Third algorithm pinned to the
       // same recursive-closure answer: union-find (q32), label-prop
       // (q116), pointer doubling (here).
-      (s, d) => Dedup.connectedComponents(sharedPairs(s, d), driverThreshold = 0)
+      (s, d) => QueryCaches.hold(Dedup.connectedComponents(sharedPairs(s, d), driverThreshold = 0))
         .withColumnRenamed("doc", "doc_id")
         .withColumnRenamed("component", "survivor_id")
         .orderBy(col("doc_id")),

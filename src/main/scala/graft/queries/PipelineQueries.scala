@@ -173,8 +173,8 @@ object PipelineQueries {
     val packable = kept.select($"doc_id",
       graft.operators.Bpe.tokenCount(
         graft.operators.Bpe.encode($"text")).as("n_tok"))
-    val packed = cutFinal(graft.operators.Packing
-      .packByBudget(packable, "doc_id", "n_tok", 1024L)
+    val packed = cutFinal(QueryCaches.hold(graft.operators.Packing
+      .packByBudget(packable, "doc_id", "n_tok", 1024L))
       .join(kept.select($"doc_id", md5($"text").as("text_md5")), Seq("doc_id"))
       .select($"doc_id", $"n_tok", $"pack_id", $"text_md5"))
       .orderBy($"doc_id")

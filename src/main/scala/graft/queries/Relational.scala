@@ -1522,9 +1522,9 @@ object Relational {
         // windows → O(buckets) driver offsets folded back as literals).
         // The oracle IS the single-task formulation, so the equality is
         // the whole point: distributed plan, bottleneck answer.
-        graft.operators.Packing.exclusivePrefixSum(
+        QueryCaches.hold(graft.operators.Packing.exclusivePrefixSum(
             Tables.orders(s, d).select($"o_orderkey", lit(1L).as("__one")),
-            "o_orderkey", "__one", "rn0")
+            "o_orderkey", "__one", "rn0"))
           .select($"o_orderkey", ($"rn0" + 1L).as("rn"))
           .orderBy($"o_orderkey")
       },

@@ -17,8 +17,12 @@ import graft.functions.{BitmapAndCount, BitmapCardinality, BpeEncodeExpr, CdcBou
 class CodegenProbe extends AnyFunSuite {
   lazy val spark = GraftSession.builder("local[4]").getOrCreate()
 
-  private def mustCompile(e: Expression): Unit =
+  // the session first: the generated-code cache is JVM-wide and takes
+  // its size from the session conf active when it is first used
+  private def mustCompile(e: Expression): Unit = {
+    assert(!spark.sparkContext.isStopped)
     GenerateUnsafeProjection.generate(Seq(org.apache.spark.sql.catalyst.expressions.Alias(e, "x")()))
+  }
 
   test("CdcBoundaries doGenCode compiles under janino") {
     mustCompile(CdcBoundaries(BoundReference(0, StringType, nullable = true), 16, 257L, 1000003L, 64L))

@@ -7,6 +7,7 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.GraftSession
+import graft.queries.QueryCaches
 
 /** The analytics surface over an ingested CNPJ lake: the reference's
   * README motivating queries (delegated there to Athena), answered by
@@ -20,8 +21,8 @@ class CnpjQueriesSpec extends AnyFunSuite {
   val lakeRoot = new File(work, "lake").getAbsolutePath
   val staging = new File(work, "staging").getAbsolutePath
 
-  def writeZip(name: String, csv: String): Unit = {
-    val zos = new ZipOutputStream(new FileOutputStream(new File(repoDir, name)))
+  def writeZip(name: String, csv: String, dir: File = repoDir): Unit = {
+    val zos = new ZipOutputStream(new FileOutputStream(new File(dir, name)))
     zos.putNextEntry(new ZipEntry(name.stripSuffix(".zip") + ".CSV"))
     zos.write(csv.getBytes(Charset.forName("ISO-8859-1")))
     zos.closeEntry()
@@ -68,12 +69,89 @@ class CnpjQueriesSpec extends AnyFunSuite {
   }
 
   test("counters: the legal-nature read is 3 jobs, sorted in one task without range partitioning") {
+    // cold: the first test's reads left their frames in the memo
+    QueryCaches.clear()
     val df = CnpjQueries.companiesByLegalNature(spark, db = "cnpj_q")
     val (rows, jobs, _) = CnpjIngestSpec.recordJobs(spark)(df.collect().toSeq)
     assert(rows.map(_.getString(0)) == Seq("Sociedade Limitada", "Empresa Publica"))
     assert(jobs.size == 3, s"jobs: ${jobs.map(_._1).mkString("\n---\n")}")
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.toLowerCase.contains("rangepartitioning"), plan)
+  }
+
+  // the rows of the returned frame itself: a frame derived from it
+  // (`.as[T]`, `.select`) is planned and run afresh
+  def municipality(db: String): Seq[(String, Long)] =
+    CnpjQueries.establishmentsPerMunicipality(spark, db = db).collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1)))
+
+  def nature(db: String): Seq[(String, Long, Double)] =
+    CnpjQueries.companiesByLegalNature(spark, db = db).collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+
+  val (muniAnswer, natureAnswer) = (Seq(("CAMPINAS", 3L), ("SANTOS", 1L)),
+    Seq(("Sociedade Limitada", 2L, 3000.50), ("Empresa Publica", 1L, 500.00)))
+
+  test("counters: on an unchanged lake each read is 3 jobs cold and 1 job warm, with identical rows") {
+    def coldThenWarm[T](read: => Seq[T], answer: Seq[T]): Unit = {
+      val (cold, coldJobs, _) = CnpjIngestSpec.recordJobs(spark)(read)
+      val (warm, warmJobs, _) = CnpjIngestSpec.recordJobs(spark)(read)
+      assert(cold == answer && warm == cold)
+      assert(coldJobs.size == 3, s"cold jobs: ${coldJobs.map(_._1).mkString("\n---\n")}")
+      assert(warmJobs.size == 1, s"warm jobs: ${warmJobs.map(_._1).mkString("\n---\n")}")
+    }
+    QueryCaches.clear()
+    coldThenWarm(municipality("cnpj_q"), muniAnswer)
+    coldThenWarm(nature("cnpj_q"), natureAnswer)
+    QueryCaches.clear()
+    val (_, again, _) = CnpjIngestSpec.recordJobs(spark)(municipality("cnpj_q"))
+    assert(again.size == 3, "a read after QueryCaches.clear() must be cold")
+  }
+
+  test("two threads reading at once get identical rows") {
+    QueryCaches.clear()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val reads = Seq.fill(2)(pool.submit(() => (municipality("cnpj_q"), nature("cnpj_q"))))
+      assert(reads.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS)) ==
+        Seq.fill(2)((muniAnswer, natureAnswer)))
+    } finally pool.shutdown()
+  }
+
+  test("a newer snapshot and a same-date re-ingest each change the answer; one memo entry per read") {
+    val (lake, db) = (s"$lakeRoot-memo", "cnpj_memo")
+    val tables = Seq("municipios", "naturezas", "empresas", "estabelecimentos")
+    def ingest(repo: File, date: String, only: Seq[String], inCatalog: Set[String]): Unit = {
+      val res = IngestJob.runWithListing(spark, ListingScraper.parse(html.replace("2023-06-01 08:00", date)),
+        only, inCatalog, repo.toURI.toString, lake, staging, "bkt", db = db)
+      assert(res.forall(r => r.updated && r.error.isEmpty), res)
+    }
+    def estabRepo(name: String, munis: Long*): File = {
+      val dir = new File(work, name); dir.mkdirs()
+      writeZip("Estabelecimentos9.zip", munis.zipWithIndex
+        .map { case (m, i) => estabRow(111L * (i % 3 + 1), m, 20200101) }.mkString("\n") + "\n", dir)
+      dir
+    }
+    QueryCaches.clear()
+    ingest(repoDir, "2023-06-01 08:00", tables, Set())
+    assert(municipality(db) == muniAnswer && municipality(db) == muniAnswer)
+    assert(nature(db) == natureAnswer)
+
+    // next month's estabelecimentos: three establishments in SANTOS
+    ingest(estabRepo("repo-next", 200, 200, 200), "2023-07-01 08:00", Seq("estabelecimentos"),
+      CatalogOps.listTables(spark, db))
+    assert(CatalogOps.listPartitions(spark, "estabelecimentos", db).sorted == Seq("20230601", "20230701"))
+    assert(municipality(db) == Seq(("SANTOS", 3L)))
+    assert(nature(db) == natureAnswer)
+    // the newer snapshot replaced each read's entry
+    assert(CnpjQueries.reads.size == 2)
+
+    // the same month re-ingested with other rows: the date is unchanged,
+    // the partition's files are not
+    ingest(estabRepo("repo-same", 100, 100, 100, 100), "2023-07-01 08:00", Seq("estabelecimentos"), Set())
+    assert(CatalogOps.listPartitions(spark, "estabelecimentos", db).sorted == Seq("20230601", "20230701"))
+    assert(municipality(db) == Seq(("CAMPINAS", 4L)))
+    assert(CnpjQueries.reads.size == 2)
   }
 
   test("the reads count the newest snapshot only, however many the lake holds") {
